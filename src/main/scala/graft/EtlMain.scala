@@ -48,50 +48,51 @@ object EtlMain {
     val parsed = Pipeline.parseDates(Pipeline.canonicalize(base))
     val enriched = Pipeline.priceJoin(Pipeline.enrich(parsed, asOf), prices)
       .persist()
+    // unpersist on every exit: a failing sink must not leave the enriched
+    // base cached in the caller's long-lived session
+    try {
+      def sink(name: String, df: DataFrame): Unit =
+        Writers.csvBr(df, s"$outDir/$name", singleFile = true)
 
-    def sink(name: String, df: DataFrame): Unit =
-      Writers.csvBr(df, s"$outDir/$name", singleFile = true)
+      // 0. full treated base, key_* helper columns excluded
+      //    (etl_pipeline.py:470-472)
+      val keep = enriched.columns.filterNot(_.startsWith("key_"))
+      sink("base_tratada_completa", enriched.select(keep.map(col): _*))
 
-    // 0. full treated base, key_* helper columns excluded
-    //    (etl_pipeline.py:470-472)
-    val keep = enriched.columns.filterNot(_.startsWith("key_"))
-    sink("base_tratada_completa", enriched.select(keep.map(col): _*))
+      sink("agenda_comparecimento", Reports.dailyAttendance(enriched))  // 1
+      sink("status_por_turno", Reports.statusByShift(enriched))         // 2
+      sink("perfil_noshow", Reports.noShowProfile(enriched))            // 3
+      sink("financeiro", Reports.financials(enriched))                  // 4
+      sink("atravessamento", Reports.journeyTimes(enriched))            // 5
+      sink("fluxo_pacientes_agregado", Reports.patientFlow(enriched))   // 6
+      sink("indicadores_confirmacao", Reports.confirmationKpis(enriched)) // 7
+      sink("qualidade_dados",                                           // 8
+        Reports.dataQuality(enriched, QualityStringCols, QualityOtherCols))
 
-    sink("agenda_comparecimento", Reports.dailyAttendance(enriched))  // 1
-    sink("status_por_turno", Reports.statusByShift(enriched))         // 2
-    sink("perfil_noshow", Reports.noShowProfile(enriched))            // 3
-    sink("financeiro", Reports.financials(enriched))                  // 4
-    sink("atravessamento", Reports.journeyTimes(enriched))            // 5
-    sink("fluxo_pacientes_agregado", Reports.patientFlow(enriched))   // 6
-    sink("indicadores_confirmacao", Reports.confirmationKpis(enriched)) // 7
-    sink("qualidade_dados",                                           // 8
-      Reports.dataQuality(enriched, QualityStringCols, QualityOtherCols))
+      // 9. schedule profile, with the occupancy side table when present
+      //    (etl_pipeline.py:627-686: absent file → zero slots)
+      val occ = occupancyCsv.flatMap(p => Readers.optionalCsv(spark, p, ";",
+        Seq("Nome_Medico", "qtde_horarios_disponiveis")))
+      val withOcc = occ match {
+        case Some(o) => Pipeline.occupancyJoin(enriched, o)
+        case None => enriched.withColumn("Horarios_Disponiveis", lit(0L))
+      }
+      sink("perfil_agenda", Reports.agendaProfile(withOcc))
 
-    // 9. schedule profile, with the occupancy side table when present
-    //    (etl_pipeline.py:627-686: absent file → zero slots)
-    val occ = occupancyCsv.flatMap(p => Readers.optionalCsv(spark, p, ";",
-      Seq("Nome_Medico", "qtde_horarios_disponiveis")))
-    val withOcc = occ match {
-      case Some(o) => Pipeline.occupancyJoin(enriched, o)
-      case None => enriched.withColumn("Horarios_Disponiveis", lit(0L))
-    }
-    sink("perfil_agenda", Reports.agendaProfile(withOcc))
-
-    // console summary (etl_pipeline.py:431-437) — the one driver-side
-    // collect: a single scalar KPI row. Sums coalesce to 0: over an
-    // empty/fully-filtered base sum() is NULL and getLong would NPE.
-    val k = enriched.agg(
-      count(lit(1)).as("total"),
-      coalesce(sum(when(col("Status_Consolidado") === "NO-SHOW", 1L)
-        .otherwise(0L)), lit(0L)).as("ns"),
-      coalesce(sum(when(col("Status_Consolidado") === "ATENDIDO",
-        round(col("Valor") * 100).cast("long")).otherwise(0L)), lit(0L)).as("realized_c"),
-      coalesce(sum(round(col("Valor") * 100).cast("long")), lit(0L)).as("potential_c"))
-      .head()
-    println(Reports.formatSummary(k.getLong(0), k.getLong(1),
-      k.getLong(2) / 100.0, k.getLong(3) / 100.0))
-
-    enriched.unpersist()
+      // console summary (etl_pipeline.py:431-437) — the one driver-side
+      // collect: a single scalar KPI row. Sums coalesce to 0: over an
+      // empty/fully-filtered base sum() is NULL and getLong would NPE.
+      val k = enriched.agg(
+        count(lit(1)).as("total"),
+        coalesce(sum(when(col("Status_Consolidado") === "NO-SHOW", 1L)
+          .otherwise(0L)), lit(0L)).as("ns"),
+        coalesce(sum(when(col("Status_Consolidado") === "ATENDIDO",
+          round(col("Valor") * 100).cast("long")).otherwise(0L)), lit(0L)).as("realized_c"),
+        coalesce(sum(round(col("Valor") * 100).cast("long")), lit(0L)).as("potential_c"))
+        .head()
+      println(Reports.formatSummary(k.getLong(0), k.getLong(1),
+        k.getLong(2) / 100.0, k.getLong(3) / 100.0))
+    } finally { enriched.unpersist(); () }
   }
 
   /** Disambiguate the two optional args: a 4th arg that parses as a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.sources.AnnIndex
 
 /** Similarity-search operators over the `embeddings` table
   * (vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
@@ -77,20 +78,6 @@ object EmbedOps {
       quantized(s, dir).write.mode("overwrite")
         .parquet(java.nio.file.Paths.get(p, "rows").toString)
     } + "/rows")
-
-  /** Cluster a cell-partitioned layer write by its partition column(s)
-    * before `partitionBy` — the gate-local twin of
-    * [[graft.sources.AnnIndex.clusterForWrite]] (guide §6 small files +
-    * §2.5 scale-adaptive): an un-clustered partitioned write emits one
-    * file per (task × cell) — r22 census: q217's fold layer 86 files
-    * avg 3.5 KB, q214's fragment layer 62 avg 1.4 KB, q224's tombstones
-    * 68 avg 256 B — and every later serve/fold read plus the write
-    * commit pays per-file overhead. AQE REBALANCE both coalesces small
-    * cells into shared write tasks (~one file per cell locally) and
-    * splits an oversized cell at the advisory partition size, so no
-    * skewed single-task write at 100 TB either. */
-  private def clusterForWrite(df: DataFrame, cols: String*): DataFrame =
-    graft.sources.AnnIndex.clusterForWrite(df, cols: _*)
 
   private val oQuant =
     "list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT)"
@@ -354,7 +341,7 @@ object EmbedOps {
           .agg(count(lit(1)).as("c"))
         cent.join(cnt, "label").write.mode("overwrite")
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-        clusterForWrite(quantized(s, dir), "label")
+        AnnIndex.clusterForWrite(quantized(s, dir), "label")
           .write.mode("overwrite").partitionBy("label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
@@ -1143,32 +1130,11 @@ object EmbedOps {
         "batch + metadata, never the corpus — the difference between " +
         "a nightly full rebuild and a continuously-fresh index.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val delta = annIncDelta(s, dir)
-      // updated centroids = stored + the fragment's per-cell integer
-      // sums (tiny on both sides; broadcast the delta aggregates)
-      val upd = foldedCentroids(s, idx, delta)
-      // ---- serve path: probe UPDATED centroids, scan only probed
-      // cells of base + delta (partition pruning on both layers)
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(upd)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      val cells = probe.select("label").distinct().collect().map(_.get(0))
-      val pool = s.read.parquet(s"$idx/vectors")
-        .filter(col("label").isin(cells: _*))
-        .withColumn("is_new", lit(false))
-        .unionByName(s.read.parquet(s"$delta/vectors")
-          .filter(col("label").isin(cells: _*))
-          .withColumn("is_new", lit(true)))
-      annIncServe(pool, probe)
+      // serve the engine-built state read-only: probe the maintained
+      // centroids (base + the fragment's integer sums), scan only the
+      // probed cells of base + fragment (partition pruning on both)
+      val path = annUpsertState(s, dir)
+      annServe(s, path, annQueries(s, path))
     },
 
     Q("q212_ann_delta_fold",
@@ -1190,42 +1156,11 @@ object EmbedOps {
         "fragment size + affected cells, not corpus size — the " +
         "compaction half of an LSM index, scheduled off-peak.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val delta = annIncDelta(s, dir)
-      val folded = graft.core.Scratch.materialize("ivf_inc_folded",
-        s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-        clusterForWrite(annFoldInput(s, idx, delta), "label")
-          .write.partitionBy("label")
-          .parquet(java.nio.file.Paths.get(p, "cells").toString)
-        foldedCentroids(s, idx, delta).write
-          .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-      }
-      // ---- serve AFTER the fold: folded centroids; probed cells
-      // route to the folded overlay when affected, else the base
-      val cents = s.read.parquet(s"$folded/centroids")
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(cents)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      val probed = probe.select("label").distinct().collect().map(_.get(0))
-      // affected set = the fold overlay's cell list (partition values,
-      // metadata-sized)
-      val affected = s.read.parquet(s"$folded/cells")
-        .select("label").distinct().collect().map(_.get(0)).toSet
-      val (hot, cold) = probed.partition(affected.contains)
-      val pool = s.read.parquet(s"$folded/cells")
-        .filter(col("label").isin(hot: _*))
-        .unionByName(s.read.parquet(s"$idx/vectors")
-          .filter(col("label").isin(cold: _*))
-          .withColumn("is_new", lit(false)))
-      annIncServe(pool, probe)
+      // serve AFTER the fold (Scratch-materialized once, like the base):
+      // probed affected cells read the fold level, untouched cells the
+      // immutable base
+      val path = annFoldedState(s, dir)
+      annServe(s, path, annQueries(s, path))
     },
 
     // -------------------------------- hybrid filtered vector search
@@ -1304,10 +1239,10 @@ object EmbedOps {
         s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
         val v = quantized(s, dir)
           .withColumn("src", pmod(col("vec_id"), lit(3)))
-        centroidTable(v).write
+        AnnIndex.centroidTable(v).write
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
         // FILTER KEY FIRST: src prunes before label — the whole point
-        clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
+        AnnIndex.clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
       val cents = s.read.parquet(s"$idx/centroids")
@@ -1433,134 +1368,24 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
-      // per-invocation scratch root; the previous invocation's copy is
-      // reclaimed (its lazy result frame is invalidated anyway)
-      val root = graft.core.Fs.rotatingTempRoot("q214_vx")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_vx" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_vx.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_vx.default")
-        sc.sql("CREATE TABLE graft_cat_vx.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_vx.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q214_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_vx.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q214_src WHERE $where")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      // commit 1: the nightly slice the base index is built from
-      // (CREATE/ALTER consumed versions of their own — capture the
-      // actual head so the nightly snapshot and the CDF stream's
-      // starting offset track the table's real history)
-      ins("vec_id % 10 <> 0")
-      val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
-      // commits 2-4: three arrival batches
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
-      // ---- nightly build: base-version rows -> cell-partitioned
-      // base + integer centroid state (sums + counts per cell)
-      val v1 = cdcVecsOf(sc.sql(
-        s"SELECT * FROM graft_cat_vx.default.vecs VERSION AS OF $baseV"))
-      val baseDir = root.resolve("base").toString
-      // associative centroid state, driver-held: cells x (dim + 1)
-      // integers — the metastore-sized piece of a production index
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // ONE snapshot scan feeds the layout write AND the centroid
-        // state off the cache, the two actions concurrent (guide
-        // §2.6; the old shape wrote, then re-read the written layer
-        // for its aggregates — identical integer sums either way)
-        val v1c = v1.persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label").write.partitionBy("label")
-              .parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
-      // ---- streaming maintenance: one micro-batch per commit
-      val fragDir = root.resolve("frags").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // two actions consume the micro-batch (fragment append +
-          // centroid fold): persist it so the CDF source's segment
-          // files are read once per commit, not twice (r16 review).
-          // persist, NOT localCheckpoint: the r22 A/B read the eager
-          // checkpoint as a per-batch regression (an extra serial
-          // materialization job before the parallel consumers; q224
-          // 3.89 -> 4.94 s) — the micro-batch lineage is shallow, so
-          // there is no planning debt for the checkpoint to pay off.
-          val rows = cdcVecsOf(batch
-            .filter(col("_change_type") === "insert")).persist()
-          try {
-            // fragment append (BATCH-sized, cell-partitioned,
-            // clustered — the rebalance exchange rides the write side
-            // only) and the centroid-fold aggregation both read the
-            // cached rows and are independent — concurrent (guide
-            // §2.6); the state mutation stays on this thread
-            var agg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              clusterForWrite(rows, "label").write.mode("append")
-                .partitionBy("label").parquet(fragDir),
-              { agg = cdcCellAgg(rows) })
-            // centroid fold: batch aggregates only, integer-exact
-            agg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) += sv(i); i += 1 }
-              state(l) = (os, oc + c)
-            }
-          } finally { rows.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
-      }
+      // commit 1 (the nightly slice) is built label-keyed; commits 2-4,
+      // three arrival batches, wait on the change feed. The stream
+      // maintains a per-invocation copy of that pristine state.
+      val path = annCopy(annState(s, dir, "ann_cdc_insert") { t =>
+        t.ins("vec_id % 10 <> 0")
+        t.build(keyedByLabel = true)
+        (0 to 2).foreach(k => t.ins(s"vec_id % 10 = 0 AND vec_id % 3 = $k"))
+      }, "q214_vx")
+      val qs = annQueries(s, path)
+      // ---- streaming maintenance: one micro-batch per commit, each
+      // appending its fragment and folding its integer aggregates in
+      streamSync(s, path)
       // ---- serve from the MAINTAINED state (base + fragments)
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
-      val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents,
-          s.read.parquet(baseDir).unionByName(s.read.parquet(fragDir)))
-      }
+      val incr = graft.core.Phases("serve") { top3(annServe(s, path, qs)) }
       // ---- the freshness AUDIT: a from-scratch rebuild over the
-      // table's current snapshot must serve identically, off the
-      // maintenance path. The rebuild's CENTROIDS are re-derived from
-      // the snapshot too — probing the maintained state would audit
-      // it against itself (r17 review) — and the snapshot is
-      // persisted so the centroid fold, the probe collect, and the
-      // pool read share ONE audit scan instead of rescanning per use
+      // table's current snapshot must serve identically
       graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
+        freshAudit(incr, top3(rebuiltServe(s, path, qs)))
       }
     },
 
@@ -1589,120 +1414,35 @@ object EmbedOps {
         "manifest swap is metadata-sized, and retired fragments stop " +
         "taxing every probe — compaction, scheduled off-peak.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val pristine = annLsmFrags(s, dir)
-      // the retire lifecycle MUTATES fragment state — operate on a
-      // per-invocation copy of the pristine Scratch fragments
-      // (milliseconds; the catalogCopy precedent)
-      val root = graft.core.Fs.rotatingTempRoot("q217_lsm")
-      val fragDirs = (0 to 2).map(k =>
-        root.resolve("frags").resolve(s"frag-$k"))
-      val manifest = new LsmManifest(root)
-      graft.core.Phases("setup") {
-        graft.core.Fs.copyRecursively(
-          java.nio.file.Paths.get(pristine), root.resolve("frags"))
-        // ---- the index MANIFEST: `<kind>,<relative path>` lines,
-        // published by ATOMIC RENAME under the docstore commit lock
-        // (the same arbitration the lakehouse commits use); versioned
-        // copies retained like MANIFEST.v<n>
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(Seq(("base", idx)), 0)
-        }
-        // three accumulation commits (the steady-state upsert cadence)
-        fragDirs.zipWithIndex.foreach { case (f, k) =>
-          graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-            manifest.publish(manifest.read() :+ (("frag", f.toString)), k + 1)
-          }
-        }
-      }
-      // ---- shared serve (the q207 shape): probe the given centroids
-      // ONCE (the r19 probePairs shape — the final top-k job used to
-      // re-execute the probe subtree behind its broadcast), scan only
-      // probed cells of the given layer pool
-      def serve(cents: DataFrame, poolOf: Seq[Any] => DataFrame)
-          : DataFrame = {
-        val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("q").as("qv"),
-            col("nn").as("qn"))
-        val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
-        annIncServe(poolOf(cells.map(c => c: Any)), probe)
-      }
-      val fragVecs = manifest.read().collect { case ("frag", p) =>
-        s"$p/vectors" }
-      val dcents = manifest.read().collect { case ("frag", p) =>
-        s"$p/dcent" }
-      val cents = foldedCentroidsAll(s, idx, dcents)
-        .persist() // tiny; probed twice (before + after)
+      // the retire lifecycle MUTATES the index — fold a per-invocation
+      // copy of the pristine state (three arrival commits synced into
+      // three fragments against the pinned base quantizer)
+      val path = annCopy(annLsmState(s, dir), "q217_lsm")
+      val root = AnnIndex.dirFor(path, "q")
+      val frags = AnnIndex.load(root).frags
+      require(frags.size == 3, s"expected three pending fragments: $frags")
+      val qs = annQueries(s, path)
       val before = graft.core.Phases("serve_pre") {
-        serve(cents, cells =>
-          s.read.parquet(s"$idx/vectors")
-            .filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false))
-            .unionByName(fragVecs.map(p => s.read.parquet(p))
-              .reduce(_.unionByName(_))
-              .filter(col("label").isin(cells: _*))
-              .withColumn("is_new", lit(true))))
-          .collect()
+        annServe(s, path, qs).collect()
       }
-      // ---- the FOLD: one affected-cells-only pass over base + all
-      // three fragments -> overlay + folded centroids
-      val fold = root.resolve("fold")
-      graft.core.Phases("fold") {
-        // the overlay write and the sealed-centroid write are
-        // independent (guide §2.6) — cents is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(annLsmFoldInput(s, idx, fragVecs), "label")
-            .write.partitionBy("label")
-            .parquet(fold.resolve("cells").toString),
-          cents.write.parquet(fold.resolve("centroids").toString))
-      }
-      // ---- the atomic RETIRE: swap the manifest under the commit
-      // lock (conflict-checked), then delete the retired fragments —
-      // deletion happens only AFTER the swap made them unreachable
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          val curFrags = cur.collect { case ("frag", p) => p }
-          require(curFrags == fragDirs.map(_.toString),
-            s"concurrent fragment change since the fold was computed " +
-              s"(expected ${fragDirs.mkString(",")}, manifest has " +
-              s"${curFrags.mkString(",")}); refusing the swap")
-          manifest.publish(Seq(("base", idx), ("fold", fold.toString)), 4)
-          curFrags.foreach(graft.core.Fs.deleteRecursively)
-        }
-      }
-      require(fragDirs.forall(f => !java.nio.file.Files.exists(f)),
+      // ---- the FOLD + atomic RETIRE: one affected-cells-only pass over
+      // base + all three fragments, a conflict-checked manifest swap
+      // under the commit lock, fragments deleted only after the swap
+      val f = graft.core.Phases("fold") { AnnIndex.fold(path, "q") }
+      require(f.foldedFragments == 3 && f.retiredLayers == 3,
+        s"expected 3 fragments folded and retired, got $f")
+      require(frags.forall(l => !java.nio.file.Files.exists(root.resolve(l))),
         "retired fragments must be deleted after the swap")
-      val post = manifest.read()
-      require(!post.exists(_._1 == "frag") &&
-        post.exists(_._1 == "fold"),
+      val post = AnnIndex.load(root)
+      require(post.frags.isEmpty && post.folds.size == 1,
         s"post-fold manifest must list base + overlay only, got $post")
-      // ---- serve AFTER, resolving layers from the swapped manifest:
-      // probed affected cells read the overlay, untouched cells the base
-      val foldDir = post.collect { case ("fold", p) => p }.head
-      val foldCells = s"$foldDir/cells"
+      // ---- serve AFTER, resolving layers from the swapped manifest
       val (afterDf, after) = graft.core.Phases("serve_post") {
-        val affected = s.read.parquet(foldCells)
-          .select("label").distinct().collect().map(_.get(0)).toSet
-        // post-swap readers resolve EVERYTHING through the manifest:
-        // centroids come from the overlay's persisted copy, never from
-        // the (retired, deleted) fragment aggregates
-        val a = serve(s.read.parquet(s"$foldDir/centroids"), cells => {
-          val (hot, cold) = cells.partition(affected.contains)
-          s.read.parquet(foldCells)
-            .filter(col("label").isin(hot: _*))
-            .unionByName(s.read.parquet(s"$idx/vectors")
-              .filter(col("label").isin(cold: _*))
-              .withColumn("is_new", lit(false)))
-        })
-        // persist: the returned frame is executed AGAIN by the caller
-        // (Verify's write / the bench's noop) — without the cache the
-        // whole post-retire serve would recompute a third time
+        val a = annServe(s, path, qs)
+        // persist: the caller executes the returned frame again
         a.persist()
         (a, a.collect())
       }
-      cents.unpersist()
       // the fold's correctness contract, asserted row for row
       require(before.toSeq == after.toSeq,
         s"serve-after-fold must equal serve-before-fold: " +
@@ -1821,17 +1561,17 @@ object EmbedOps {
         val v = quantized(s, dir).withColumn("src",
           when(col("label") <= 1, lit(0L))
             .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-        centroidTable(v).write
+        AnnIndex.centroidTable(v).write
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
         // the remediation: ONE per-src centroid table, src-partitioned
         // (a probe reads exactly its slice's cells-x-dim integers)
-        clusterForWrite((0L to 2L)
-            .map(k => centroidTable(v.filter(col("src") === k))
+        AnnIndex.clusterForWrite((0L to 2L)
+            .map(k => AnnIndex.centroidTable(v.filter(col("src") === k))
               .withColumn("src", lit(k)))
             .reduce(_.unionByName(_)), "src")
           .write.partitionBy("src")
           .parquet(java.nio.file.Paths.get(p, "scentroids").toString)
-        clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
+        AnnIndex.clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
       val qs = s.read.parquet(s"$idx/vectors")
@@ -1843,7 +1583,7 @@ object EmbedOps {
       // building their broadcasts
       def probeOf(cents: DataFrame): (Seq[Any], DataFrame) = {
         val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
+          AnnIndex.probePairs(s, qs, cents, 2)
         (cells.map(c => c: Any), probe)
       }
       val wr = Window.partitionBy(col("qid"))
@@ -1971,118 +1711,45 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      val (idx, pristine) = annTombPaths(s, dir)
-      // per-invocation copy: compaction RETIRES the fragment
-      val root = graft.core.Fs.rotatingTempRoot("q221_tomb")
-      val tomb = root.resolve("tomb")
-      val manifest = new LsmManifest(root)
-      graft.core.Phases("setup") {
-        graft.core.Fs.copyRecursively(
-          java.nio.file.Paths.get(pristine), root.resolve("tomb"))
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(Seq(("base", idx), ("tomb", tomb.toString)), 0)
-        }
-      }
-      val tombKeys = s.read.parquet(s"$tomb/keys")
+      // per-invocation copy: compaction RETIRES the tombstone fragment
+      val path = annCopy(annTombState(s, dir), "q221_tomb")
+      val root = AnnIndex.dirFor(path, "q")
+      val tombs = AnnIndex.load(root).tombs
+      require(tombs.size == 1, s"expected one pending tombstone: $tombs")
+      val tomb = root.resolve(tombs.head)
       // deleted-id audit list (tombstones are batch-sized by contract)
       val deadIds = graft.core.Phases("setup") {
-        tombKeys.select("vec_id").collect()
-          .map(_.getLong(0)).toSet
+        s.read.parquet(tomb.resolve("keys").toString).select("vec_id")
+          .collect().map(_.getLong(0)).toSet
       }
-      // centroid state MINUS the fragment's aggregates (exact ints)
-      val cents = s.read.parquet(s"$idx/centroids")
-        .join(broadcast(s.read.parquet(s"$tomb/dcent")),
-          Seq("label"), "left")
-        .select(col("label"),
-          when(col("dv").isNull, col("sv"))
-            .otherwise(zip_with(col("sv"), col("dv"), (a, b) => a - b))
-            .as("sv"),
-          (col("c") - coalesce(col("dc"), lit(0L))).as("c"))
-        // a fully-tombstoned cell leaves c = 0 with a ZERO vector whose
-        // probe distance is exactly 0 — it would win a probe slot while
-        // holding no candidates, and the oracle (built over survivors)
-        // never sees the label; drop it from the probe AND from the
-        // persisted compacted centroids (r17 review)
-        .filter(col("c") > 0)
-        .persist()
-      // the shared state serve (annStateServeBy), ordered for the
-      // in-gate row-by-row compare
-      val serveQs = s.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      def serve(cc: DataFrame, poolOf: Seq[Any] => DataFrame): DataFrame =
-        annStateServeBy(serveQs, cc, poolOf).orderBy("query_id", "rnk")
-      // ---- serve WITH tombstones: anti-join the broadcast keys
-      // inside probed cells — deleted vectors are unfindable before
-      // any byte is rewritten
-      val before = graft.core.Phases("serve_pre") {
-        serve(cents, cells =>
-          s.read.parquet(s"$idx/vectors")
-            .filter(col("label").isin(cells: _*))
-            .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-          .collect()
-      }
+      val qs = annQueries(s, path)
+      def serve(): DataFrame = annServe(s, path, qs).drop("is_new")
+      // ---- serve WITH tombstones: subtracted centroids, the broadcast
+      // keys anti-joined inside probed cells — deleted vectors are
+      // unfindable before any byte is rewritten
+      val before = graft.core.Phases("serve_pre") { serve().collect() }
       require(before.forall(r => !deadIds(r.getLong(2))),
         "a tombstoned vector surfaced in the masked serve")
       // ---- COMPACTION: rewrite ONLY the affected cells without the
-      // tombstoned rows, persist the subtracted centroids, swap the
-      // manifest atomically, delete the retired fragment
-      val affected = tombKeys.select("label").distinct()
-        .collect().map(_.get(0))
-      val compacted = root.resolve("compact")
-      graft.core.Phases("compact") {
-        // rewrite + sealed-centroid write are independent (guide
-        // §2.6) — cents is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(s.read.parquet(s"$idx/vectors")
-              .filter(col("label").isin(affected.toSeq: _*))
-              .join(broadcast(tombKeys), Seq("vec_id", "label"),
-                "left_anti"),
-              "label")
-            .write.partitionBy("label")
-            .parquet(compacted.resolve("cells").toString),
-          cents.write.parquet(compacted.resolve("centroids").toString))
-      }
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          require(cur.collect { case ("tomb", p) => p } ==
-            Seq(tomb.toString),
-            s"concurrent tombstone change since compaction was computed; " +
-              "refusing the swap")
-          manifest.publish(
-            Seq(("base", idx), ("compact", compacted.toString)), 1)
-          graft.core.Fs.deleteRecursively(tomb)
-        }
-      }
+      // tombstoned rows, swap the manifest atomically, delete the
+      // retired fragment
+      graft.core.Phases("compact") { AnnIndex.fold(path, "q") }
       require(!java.nio.file.Files.exists(tomb),
         "the retired tombstone fragment must be deleted after the swap")
       // audit: the compacted cells physically lack the deleted ids
+      val compacted = AnnIndex.load(root)
       val leaked = graft.core.Phases("audit") {
-        s.read.parquet(compacted.resolve("cells").toString)
+        s.read.parquet(compacted.abs(s"${compacted.folds.last}/cells"))
           .filter(col("vec_id").isin(deadIds.toSeq: _*)).count()
       }
       require(leaked == 0, s"$leaked tombstoned rows survived compaction")
       // ---- serve AFTER compaction, resolved through the manifest:
-      // affected cells read the compacted overlay (no mask needed),
-      // untouched cells the base
-      val post = manifest.read()
-      val compDir = post.collect { case ("compact", p) => p }.head
-      val affectedSet = affected.toSet
+      // affected cells read the compacted level, untouched cells base
       val (afterDf, after) = graft.core.Phases("serve_post") {
-        val a = serve(
-          s.read.parquet(s"$compDir/centroids"), cells => {
-            val (hot, cold) = cells.partition(affectedSet.contains)
-            s.read.parquet(s"$compDir/cells")
-              .filter(col("label").isin(hot: _*))
-              .unionByName(s.read.parquet(s"$idx/vectors")
-                .filter(col("label").isin(cold: _*)))
-          })
+        val a = serve()
         a.persist()
         (a, a.collect())
       }
-      cents.unpersist()
       require(before.toSeq == after.toSeq,
         "serve-after-compaction must equal serve-with-tombstones: " +
           s"${before.toSeq.diff(after.toSeq)} vs " +
@@ -2149,123 +1816,31 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
-      val root = graft.core.Fs.rotatingTempRoot("q222_forget")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_fg" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_fg.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_fg.default")
-        // merge-on-read DELETEs: deletion vectors make the change feed
-        // emit EXACTLY the deleted rows (the CDC-friendly cost model —
-        // Delta enables DVs by default for the same reason); a
-        // copy-on-write DELETE would surface as rewrite churn
-        // (delete-all + reinsert-survivors) in a snapshot-diff CDF
-        sc.sql("CREATE TABLE graft_cat_fg.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_fg.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q222_src")
-      }
-      graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_fg.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          "FROM q222_src")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
-      // commits 2-4: three takedown batches (together: doc_id % 7 = 3)
-      graft.core.Phases("dml") {
-        (0 to 2).foreach(k => sc.sql(
-          "DELETE FROM graft_cat_fg.default.vecs " +
-            s"WHERE doc_id % 7 = 3 AND doc_id % 3 = $k"))
-      }
-      // ---- nightly build from the base version: cell-partitioned
-      // layout + driver-held integer centroid state
-      val baseDir = root.resolve("base").toString
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // one snapshot scan feeds write + centroid state (guide §2.6)
-        val v1c = cdcVecsOf(sc.sql(
-          "SELECT * FROM graft_cat_fg.default.vecs " +
-            s"VERSION AS OF $baseV")).persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label")
-              .write.partitionBy("label").parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
-      // ---- streaming maintenance: one micro-batch per DELETE commit;
-      // per batch: tombstone append (batch-sized, cell-partitioned)
-      // + integer centroid SUBTRACT (metadata-sized)
-      val tombDir = root.resolve("tombs").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persist, not localCheckpoint — see the q214 batch note
-          val rows = cdcVecsOf(batch
-            .filter(col("_change_type") === "delete")).persist()
-          try {
-            // tombstone append + centroid-subtract aggregation both
-            // read the cached rows — concurrent (guide §2.6)
-            var agg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              clusterForWrite(rows.select("vec_id", "label"), "label")
-                .write.mode("append")
-                .partitionBy("label").parquet(tombDir),
-              { agg = cdcCellAgg(rows) })
-            agg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) -= sv(i); i += 1 }
-              state(l) = (os, oc - c)
-            }
-          } finally { rows.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
-      }
+      // merge-on-read DELETEs: deletion vectors make the change feed
+      // emit EXACTLY the deleted rows (the CDC-friendly cost model —
+      // Delta enables DVs by default for the same reason); a
+      // copy-on-write DELETE would surface as rewrite churn
+      // (delete-all + reinsert-survivors) in a snapshot-diff CDF.
+      // Commit 1 is built; commits 2-4, three takedown batches
+      // (together: doc_id % 7 = 3), wait on the change feed.
+      val path = annCopy(annState(s, dir, "ann_cdc_forget", mor = true) { t =>
+        t.ins("TRUE")
+        t.build(keyedByLabel = true)
+        (0 to 2).foreach(k => t.del(s"doc_id % 7 = 3 AND doc_id % 3 = $k"))
+      }, "q222_forget")
+      val qs = annQueries(s, path)
+      // ---- streaming maintenance: one micro-batch per DELETE commit —
+      // a tombstone append + an integer centroid SUBTRACT each
+      streamSync(s, path)
       // ---- serve from the maintained state: subtracted centroids,
       // base pool MASKED by the broadcast tombstone keys
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
-      val tombKeys = s.read.parquet(tombDir)
-      val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents, s.read.parquet(baseDir)
-          .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-      }
+      val incr = graft.core.Phases("serve") { top3(annServe(s, path, qs)) }
       // ---- freshness audit: a from-scratch rebuild over the CURRENT
-      // snapshot must serve identically, off the maintenance path;
-      // rebuild centroids re-derive from the snapshot — probing the
-      // maintained state would audit the SUBTRACT path against
-      // itself (r17 review) — and the snapshot persists so the
-      // centroid fold, probe collect, and pool read share one scan
+      // snapshot must serve identically — its centroids re-derive from
+      // the snapshot, so the SUBTRACT path is never audited against
+      // itself
       graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
+        freshAudit(incr, top3(rebuiltServe(s, path, qs)))
       }
     },
 
@@ -2287,32 +1862,15 @@ object EmbedOps {
         "resolves every read from ONE manifest snapshot (layer " +
         "shadowing newest-first), and serve-after-fold == " +
         "serve-before-fold row for row is required in-gate; both " +
-        "equal q207/q212/q217's shared oracle — four independent " +
-        "implementations of the same contract now pin each other. At " +
+        "equal q207/q212/q217's shared oracle — the same engine " +
+        "lifecycle reached through SQL instead of the Scala API. At " +
         "100 TB this is the difference between a re-plumbed script " +
         "per pipeline and `CALL system.ann_*` next to OPTIMIZE/" +
         "VACUUM/ANALYZE in the nightly maintenance job.",
       Some(annIncOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q223_annproc")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_ap" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_ap.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_ap.default")
-        sc.sql("CREATE TABLE graft_cat_ap.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_ap.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q223_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_ap.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q223_src WHERE $where")
-      }
+      val t = new Vecs(s, dir,
+        graft.core.Fs.rotatingTempRoot("q223_annproc"), "graft_cat_ap")
+      import t.{ins, sc}
       // commit 1: the nightly slice; then the build — THROUGH SQL
       ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
@@ -2331,19 +1889,9 @@ object EmbedOps {
       }
       require(sy.getLong(2) == 3 && sy.getLong(3) == 0,
         s"expected 3 fragments / 0 tombstones from ann_sync, got $sy")
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
-      val qs = s.read.parquet(
-          idxRoot.resolve("base").resolve("vectors").toString)
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      // the index stores cells as LONG partition values; the oracle's
-      // cell column is the parquet label (INT) — align the output type
-      def serve(): DataFrame = graft.sources.AnnIndex
-        .serve(sc, tablePath, "q", qs)
-        .withColumn("cell", col("cell").cast("int"))
+      val idxRoot = AnnIndex.dirFor(t.path, "q")
+      val qs = annQueries(s, t.path)
+      def serve(): DataFrame = annServe(sc, t.path, qs)
       val before = graft.core.Phases("serve_pre") { serve().collect() }
       val f = graft.core.Phases("fold") {
         sc.sql("CALL graft_cat_ap.system.ann_fold(" +
@@ -2426,152 +1974,35 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
-      val root = graft.core.Fs.rotatingTempRoot("q224_mixed")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_mx" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_mx.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_mx.default")
-        // merge-on-read: DELETE commits emit exactly the deleted rows
-        // with their pre-image values on the change feed (q222's cost
-        // model) — what keeps the tombstone cell-locatable lookup-free
-        sc.sql("CREATE TABLE graft_cat_mx.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_mx.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q224_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_mx.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q224_src WHERE $where")
-        ()
-      }
-      def del(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql(s"DELETE FROM graft_cat_mx.default.vecs WHERE $where")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      // commit 1: the nightly slice the base index is built from
-      ins("vec_id % 10 <> 0")
-      val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
-      // commits 2-6: INSERT and DELETE interleave; each DELETE also
-      // hits rows the PREVIOUS insert batch brought in (cross-type)
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      del("doc_id % 7 = 3 AND doc_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      del("doc_id % 7 = 3 AND doc_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
-      // ---- nightly build from the base version: cell-partitioned
-      // layout + driver-held integer centroid state
-      val baseDir = root.resolve("base").toString
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // one snapshot scan feeds write + centroid state (guide §2.6)
-        val v1c = cdcVecsOf(sc.sql(
-          "SELECT * FROM graft_cat_mx.default.vecs " +
-            s"VERSION AS OF $baseV")).persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label")
-              .write.partitionBy("label").parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
+      // merge-on-read: DELETE commits emit exactly the deleted rows
+      // with their pre-image values on the change feed (q222's cost
+      // model) — what keeps the tombstone cell-locatable lookup-free.
+      // Commit 1 (the nightly slice) is built label-keyed; commits
+      // 2-6 interleave INSERT and DELETE, each DELETE also hitting rows
+      // the PREVIOUS insert batch brought in (cross-type)
+      val path = annCopy(
+        annState(s, dir, "ann_cdc_mixed", mor = true) { t =>
+          t.ins("vec_id % 10 <> 0")
+          t.build(keyedByLabel = true)
+          t.ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
+          t.del("doc_id % 7 = 3 AND doc_id % 3 = 0")
+          t.ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
+          t.del("doc_id % 7 = 3 AND doc_id % 3 = 1")
+          t.ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
+        }, "q224_mixed")
+      val qs = annQueries(s, path)
       // ---- ONE maintenance stream: each micro-batch (one per commit)
       // routes its rows by change type against the SHARED state
-      val fragDir = root.resolve("frags").toString
-      val tombDir = root.resolve("tombs").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persist ONCE: both routes read the commit's CDF segments
-          // from the cache, not twice from disk
-          // persist, not localCheckpoint — see the q214 batch note
-          val chg = batch.persist()
-          try {
-            val insRows = cdcVecsOf(chg
-              .filter(col("_change_type") === "insert"))
-            val delRows = cdcVecsOf(chg
-              .filter(col("_change_type") === "delete"))
-            // both routes' aggregations read the cached commit — run
-            // them concurrently, then the (independent-dir) layer
-            // writes the counts justify, then the state mutations on
-            // this thread. ADD-then-SUBTRACT stays exact in any
-            // order (integer group), and the apply order is kept
-            // ins-then-del exactly as the serial loop's.
-            var insAgg: Array[(Int, Seq[Long], Long)] = null
-            var delAgg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              { insAgg = cdcCellAgg(insRows) },
-              { delAgg = cdcCellAgg(delRows) })
-            val writes = Seq(
-              if (insAgg.nonEmpty) Some(() =>
-                clusterForWrite(insRows, "label").write.mode("append")
-                  .partitionBy("label")
-                  .parquet(fragDir) : Unit) else None,
-              if (delAgg.nonEmpty) Some(() =>
-                clusterForWrite(delRows.select("vec_id", "label"), "label")
-                  .write.mode("append")
-                  .partitionBy("label").parquet(tombDir) : Unit) else None
-            ).flatten
-            graft.sources.AnnIndex.inParallelAll(writes)
-            insAgg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) += sv(i); i += 1 }
-              state(l) = (os, oc + c)
-            }
-            delAgg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) -= sv(i); i += 1 }
-              state(l) = (os, oc - c)
-            }
-          } finally { chg.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
-      }
+      streamSync(s, path)
       // ---- serve from the maintained state: probed cells of base +
       // fragments, masked by the broadcast tombstone keys (the mask
       // covers FRAGMENT rows too — the cross-type case)
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
-      val tombKeys = s.read.parquet(tombDir)
-      val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents,
-          s.read.parquet(baseDir).unionByName(s.read.parquet(fragDir))
-            .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-      }
+      val incr = graft.core.Phases("serve") { top3(annServe(s, path, qs)) }
       // ---- freshness audit vs a from-scratch rebuild of the CURRENT
       // snapshot (centroids re-derived from the snapshot, never the
       // maintained state)
       graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
+        freshAudit(incr, top3(rebuiltServe(s, path, qs)))
       }
     },
 
@@ -2600,200 +2031,79 @@ object EmbedOps {
         "fragments + affected cells; the blast radius of an upsert " +
         "or takedown is its own partition, by construction.",
       Some(filteredLsmOracle)) { (s, dir) =>
-      val idx = filteredLsmIdx(s, dir)
-      val root = graft.core.Fs.rotatingTempRoot("q225_flsm")
-      val manifest = new LsmManifest(root)
-      graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-        manifest.publish(Seq(("base", idx)), 0)
-      }
-      val pinned0 = s.read.parquet(s"$idx/scentroids")
-        .filter(col("src") === 0).drop("src")
-      // ---- upsert commit into src 0: held-out arrivals assigned
-      // against the PINNED src-0 quantizer (the per-src twin of q207)
-      val frag = root.resolve("frag")
-      graft.core.Phases("upsert") {
-        // ONE assignment pass feeds both layer writes off the cache
-        // (the read-back shape re-scanned the written fragment for
-        // its aggregates), and the two writes are independent —
-        // concurrent (guide §2.6). dcent values are identical either
-        // way: integer sums over the same rows.
-        val assigned = graft.sources.AnnIndex.assign(
-          s.read.parquet(s"$idx/arrivals"), pinned0).persist()
-        try {
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(assigned, "label")
-              .write.partitionBy("label")
-              .parquet(frag.resolve("vectors").toString),
-            fragmentAggregates(assigned)
-              .write.parquet(frag.resolve("dcent").toString))
-        } finally { assigned.unpersist(); () }
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(manifest.read() :+ (("frag", frag.toString)), 1)
-        }
-      }
-      val fragBack = s.read.parquet(frag.resolve("vectors").toString)
-      // ---- delete commit in src 0: tombstone keys + aggregates
-      // (requests carry their rows — the q221/q222 CDF posture)
-      val dead = s.read.parquet(s"$idx/vectors")
-        .filter(col("src") === 0 && col("vec_id") % 7 === 3).drop("src")
-      val tomb = root.resolve("tomb")
-      graft.core.Phases("delete") {
-        // keys + aggregates derive from the same request rows and
-        // write to independent dirs — concurrent (guide §2.6)
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(dead.select("vec_id", "label"), "label")
-            .write.partitionBy("label")
-            .parquet(tomb.resolve("keys").toString),
-          fragmentAggregates(dead).write
-            .parquet(tomb.resolve("dcent").toString))
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(manifest.read() :+ (("tomb", tomb.toString)), 2)
-        }
-      }
-      val tombKeys = s.read.parquet(tomb.resolve("keys").toString)
+      // per-invocation copy of the pristine state: the base slice built
+      // as a per-src family (pinned per-src quantizers), then an upsert
+      // commit and a takedown commit in src 0 pending on the feed
+      val path = annCopy(
+        annState(s, dir, "ann_filtered_lsm", mor = true, src = true) { t =>
+          t.ins("vec_id % 10 <> 0")
+          t.build(filterCol = "src")
+          t.ins("vec_id % 10 = 0 AND src = 0")
+          t.del("doc_id % 7 = 3 AND src = 0 AND doc_id % 10 <> 0")
+        }, "q225_flsm")
+      val sub0 = AnnIndex.dirFor(path, "q").resolve("src=0")
+      // ---- maintenance: the upsert becomes a src-0 fragment assigned
+      // against src 0's PINNED quantizer, the takedown a src-0
+      // tombstone whose integer aggregates the state SUBTRACTS
+      val sy = graft.core.Phases("sync") { AnnIndex.sync(path, "q") }
+      require(sy.fragments == 1 && sy.tombstones == 1,
+        s"expected 1 fragment + 1 tombstone (both in src 0), got $sy")
+      val pending = AnnIndex.load(sub0)
       val deadIds = graft.core.Phases("delete") {
-        tombKeys.select("vec_id").collect()
-          .map(_.getLong(0)).toSet
+        s.read.parquet(pending.abs(s"${pending.tombs.head}/keys"))
+          .select("vec_id").collect().map(_.getLong(0)).toSet
       }
-      // maintained src-0 centroid state: pinned + frag adds - tomb subs
-      def applyDelta(acc: DataFrame, dcent: DataFrame, sign: Int)
-          : DataFrame =
-        acc.join(broadcast(dcent), Seq("label"), "left")
-          .select(col("label"),
-            when(col("dv").isNull, col("sv"))
-              .otherwise(zip_with(col("sv"), col("dv"),
-                (a, b) => a + lit(sign) * b)).as("sv"),
-            (col("c") + lit(sign.toLong) * coalesce(col("dc"), lit(0L)))
-              .as("c"))
-      val maintained = applyDelta(
-        applyDelta(pinned0,
-          s.read.parquet(frag.resolve("dcent").toString), 1),
-        s.read.parquet(tomb.resolve("dcent").toString), -1)
-        .persist()
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      def serveSlice(cents: DataFrame, poolOf: Seq[Any] => DataFrame)
-          : DataFrame = {
-        // probe ONCE (r19 probePairs shape) — the top-k job used to
-        // re-execute the probe subtree building its broadcast
-        val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
-        graft.sources.AnnIndex.topKWithBestNew(
-          poolOf(cells.map(c => c: Any)), probe, 3)
-      }
+      val qs = annQueries(s, path)
       // ---- serve WITH pending layers: base src-0 cells + fragment,
       // masked by the broadcast tombstone keys
       val before = graft.core.Phases("serve_pre") {
-        serveSlice(maintained, cells =>
-          s.read.parquet(s"$idx/vectors").filter(col("src") === 0)
-            .drop("src").filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false))
-            .unionByName(fragBack.filter(col("label").isin(cells: _*))
-              .withColumn("is_new", lit(true)))
-            .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-          .collect()
+        annServe(s, path, qs, Some(0L)).collect()
       }
       require(before.forall(r => !deadIds(r.getLong(2))),
         "a tombstoned vector surfaced in the masked src-0 serve")
       require(before.exists(_.getBoolean(4)),
         "an upserted vector must be searchable in the src-0 serve")
-      // ---- FOLD, pruned to src 0's affected cells only
-      val affected = fragBack.select("label").distinct()
-        .unionByName(tombKeys.select("label").distinct())
-        .distinct().collect().map(_.get(0)).toSeq
-      val fold = root.resolve("fold")
-      graft.core.Phases("fold") {
-        // overlay + sealed-centroid writes are independent (guide
-        // §2.6) — maintained is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(s.read.parquet(s"$idx/vectors")
-              .filter(col("src") === 0).drop("src")
-              .filter(col("label").isin(affected: _*))
-              .withColumn("is_new", lit(false))
-              .join(broadcast(tombKeys), Seq("vec_id", "label"),
-                "left_anti")
-              .unionByName(fragBack.withColumn("is_new", lit(true))),
-              "label")
-            .write.partitionBy("label")
-            .parquet(fold.resolve("cells").toString),
-          maintained.filter(col("c") > 0).write
-            .parquet(fold.resolve("centroids").toString))
-      }
-      // ---- atomic retire (the q217 swap, conflict-checked)
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          require(cur.collect { case ("frag", p) => p } ==
-            Seq(frag.toString) &&
-            cur.collect { case ("tomb", p) => p } == Seq(tomb.toString),
-            s"concurrent layer change since the fold was computed " +
-              s"(manifest has $cur); refusing the swap")
-          manifest.publish(
-            Seq(("base", idx), ("fold", fold.toString)), 3)
-          graft.core.Fs.deleteRecursively(frag)
-          graft.core.Fs.deleteRecursively(tomb)
-        }
-      }
-      require(!java.nio.file.Files.exists(frag) &&
-        !java.nio.file.Files.exists(tomb),
+      // ---- FOLD, pruned to src 0's affected cells, with the atomic
+      // retire (conflict-checked manifest swap, layers deleted after)
+      val f = graft.core.Phases("fold") { AnnIndex.fold(path, "q") }
+      require(f.foldedFragments == 1 && f.appliedTombstones == 1,
+        s"expected the fold to take 1 fragment + 1 tombstone, got $f")
+      require((pending.frags ++ pending.tombs)
+        .forall(l => !java.nio.file.Files.exists(sub0.resolve(l))),
         "retired layers must be deleted after the swap")
+      val folded = AnnIndex.load(sub0)
       val leaked = graft.core.Phases("audit") {
-        s.read.parquet(fold.resolve("cells").toString)
+        s.read.parquet(folded.abs(s"${folded.folds.last}/cells"))
           .filter(col("vec_id").isin(deadIds.toSeq: _*)).count()
       }
       require(leaked == 0, s"$leaked tombstoned rows survived the fold")
-      // ---- serve AFTER, resolved through the swapped manifest
-      val post = manifest.read()
-      val foldDir = post.collect { case ("fold", p) => p }.head
-      val affectedSet = affected.toSet
-      val (s0after, after) = graft.core.Phases("serve_post") {
-        val a = serveSlice(
-          s.read.parquet(s"$foldDir/centroids"), cells => {
-            val (hot, cold) = cells.partition(affectedSet.contains)
-            s.read.parquet(s"$foldDir/cells")
-              .filter(col("label").isin(hot: _*))
-              .unionByName(s.read.parquet(s"$idx/vectors")
-                .filter(col("src") === 0).drop("src")
-                .filter(col("label").isin(cold: _*))
-                .withColumn("is_new", lit(false)))
-          })
-        a.persist()
-        (a, a.collect())
+      // ---- serve BOTH filtered slices in ONE call: every query runs
+      // once per src, routed to that src's sub-index
+      import s.implicits._
+      val out = AnnIndex.serveMixed(s, path, "q",
+          qs.crossJoin(Seq(0L, 1L).toDF("flt_src")), "flt_src")
+        .select(col("flt_src").cast("int").as("flt_src"), col("query_id"),
+          col("rnk"), col("neighbor_id"), col("cell").cast("int").as("cell"),
+          col("is_new"), col("cosine"))
+        .orderBy("flt_src", "query_id", "rnk")
+      // the OTHER slice: src 1 serves through the same epoch and reads
+      // ZERO lifecycle files — every src-1 input lives under its base.
+      // inputFiles BEFORE persist: caching swaps the optimized plan's
+      // scans for an InMemoryRelation and the file set goes empty
+      val s1files = out.inputFiles.map(f => java.net.URI.create(f).getPath)
+        .filter(_.contains("/src=1/"))
+      require(s1files.nonEmpty && s1files.forall(_.contains("/src=1/base/")),
+        s"src-1 serve must read zero lifecycle files, got " +
+          s"${s1files.filterNot(_.contains("/src=1/base/")).toSeq}")
+      out.persist()
+      val after = graft.core.Phases("serve_post") {
+        out.collect().filter(_.getInt(0) == 0)
+          .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.tail))
       }
-      maintained.unpersist()
       require(before.toSeq == after.toSeq,
         s"src-0 serve-after-fold must equal serve-before-fold: " +
           s"${before.toSeq.diff(after.toSeq)} vs " +
           s"${after.toSeq.diff(before.toSeq)}")
-      // ---- the OTHER slice: src 1 serves through the same manifest
-      // epoch and provably reads ZERO lifecycle files — its whole
-      // input set lives under the immutable base layout
-      val s1serve = graft.core.Phases("serve_s1") {
-        serveSlice(
-          s.read.parquet(s"$idx/scentroids")
-            .filter(col("src") === 1).drop("src"),
-          cells => s.read.parquet(s"$idx/vectors")
-            .filter(col("src") === 1).drop("src")
-            .filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false)))
-      }
-      // inputFiles BEFORE persist: caching swaps the optimized plan's
-      // scans for an InMemoryRelation and the file set goes empty
-      val s1files = s1serve.inputFiles
-        .map(f => java.net.URI.create(f).getPath)
-      s1serve.persist()
-      require(s1files.nonEmpty &&
-        s1files.forall(_.startsWith(idx)) &&
-        !s1files.exists(_.startsWith(root.toString)),
-        s"src-1 serve must read zero lifecycle files, got " +
-          s"${s1files.filterNot(_.startsWith(idx)).toSeq}")
-      val out = s0after.withColumn("flt_src", lit(0))
-        .unionByName(s1serve.withColumn("flt_src", lit(1)))
-        .select(col("flt_src"), col("query_id"), col("rnk"),
-          col("neighbor_id"), col("cell"), col("is_new"), col("cosine"))
-        .orderBy("flt_src", "query_id", "rnk")
-      out.persist()
       out
     },
 
@@ -2816,36 +2126,15 @@ object EmbedOps {
         "asserted in-gate to read ZERO lifecycle files (no fragment/" +
         "tombstone/fold path in its input set — structurally " +
         "guaranteed by the separate trees, and checked anyway). The " +
-        "oracle is SHARED with q225 — the gate-local lifecycle and " +
-        "the procedure surface must produce identical serves, so the " +
-        "two implementations pin each other. At 100 TB: `CALL " +
+        "oracle is SHARED with q225 — the Scala lifecycle API and " +
+        "the procedure surface must produce identical serves. At " +
+        "100 TB: `CALL " +
         "system.ann_build(..., filter_col)` next to OPTIMIZE in the " +
         "nightly job is the whole filtered-ANN deployment story.",
       Some(filteredLsmOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q226_family")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_fa" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_fa.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_fa.default")
-        sc.sql("CREATE TABLE graft_cat_fa.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_fa.default.vecs ADD COLUMNS " +
-          "(vlabel INT, src INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).withColumn("src",
-            when(col("label") <= 1, lit(0L))
-              .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-          .createOrReplaceTempView("q226_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_fa.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), " +
-          s"CAST(src AS INT), q FROM q226_src WHERE $where")
-      }
+      val t = new Vecs(s, dir, graft.core.Fs.rotatingTempRoot("q226_family"),
+        "graft_cat_fa", mor = true, src = true)
+      import t.{ins, sc}
       // commit 1: the base slice; the family build — THROUGH SQL
       ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
@@ -2853,9 +2142,7 @@ object EmbedOps {
           "'default.vecs', 'doc_id', 'q', 'vlabel', 'src')").head()
       }
       require(b.getLong(3) > 0, s"family build indexed no vectors: $b")
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
+      val idxRoot = AnnIndex.dirFor(t.path, "q")
       require(graft.sources.AnnIndex.isFamily(idxRoot),
         "ann_build with filter_col must produce a filtered family")
       // commits 2-3: an upsert and a takedown, both in src 0 only
@@ -2871,17 +2158,8 @@ object EmbedOps {
       }
       require(sy.getLong(2) == 1 && sy.getLong(3) == 1,
         s"expected 1 fragment + 1 tombstone (both in src 0), got $sy")
-      // queries: base rows vec_id < 5 (any src) — the union of the
-      // sub-index bases IS the base slice
-      val qs = (0L to 2L).map(k => s.read.parquet(idxRoot
-          .resolve(s"src=$k").resolve("base").resolve("vectors").toString))
-        .reduce(_.unionByName(_))
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      def serveF(src: Long): DataFrame = graft.sources.AnnIndex
-        .serve(sc, tablePath, "q", qs, filter = Some(src))
-        .withColumn("cell", col("cell").cast("int"))
+      val qs = annQueries(s, t.path)
+      def serveF(src: Long): DataFrame = annServe(sc, t.path, qs, Some(src))
       // src 1 serves WHILE src 0 carries pending layers: its input
       // set must contain zero lifecycle files (frag/tomb exist right
       // now in src 0's tree — and nowhere near src 1's)
@@ -2959,25 +2237,9 @@ object EmbedOps {
         FROM (VALUES ('folded', 0, 0, 1), ('pending', 1, 1, 0))
              ph(phase, fragments, tombstones, folds)
         CROSS JOIN cells ORDER BY ph.phase""")) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q227_anncat")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_ad" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_ad.root" ->
-          root.resolve("cat").toString)
-      sc.sql("CREATE NAMESPACE graft_cat_ad.default")
-      sc.sql("CREATE TABLE graft_cat_ad.default.vecs (" +
-        "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-        "source STRING, text STRING) TBLPROPERTIES " +
-        "('graft.rowlevel.mode' = 'merge-on-read')")
-      sc.sql("ALTER TABLE graft_cat_ad.default.vecs ADD COLUMNS " +
-        "(vlabel INT, q ARRAY<BIGINT>)")
-      quantizedStaged(sc, dir).createOrReplaceTempView("q227_src")
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_ad.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q227_src WHERE $where")
-      }
+      val t = new Vecs(s, dir, graft.core.Fs.rotatingTempRoot("q227_anncat"),
+        "graft_cat_ad", mor = true)
+      import t.{ins, sc}
       ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
         sc.sql("CALL graft_cat_ad.system.ann_build(" +
@@ -3011,9 +2273,8 @@ object EmbedOps {
       }
       // retention through the procedure surface: build v0 + two sync
       // commits (v1, v2) + the fold's v3 — the fold keeps ONLY v3
-      val idxRoot = graft.sources.AnnIndex.dirFor(root.resolve("cat")
-        .resolve("default").resolve("vecs").toString, "q")
-      val keptVs = new graft.sources.AnnIndex.Manifest(idxRoot).versionCopies
+      val keptVs = new AnnIndex.Manifest(AnnIndex.dirFor(t.path, "q"))
+        .versionCopies
       require(keptVs == Seq(3),
         s"ann_fold must expire manifest versions below its publish, " +
           s"kept: $keptVs")
@@ -3082,25 +2343,9 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                FALSE AS is_new, ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q228_annrb")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_rb" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_rb.root" ->
-          root.resolve("cat").toString)
-      sc.sql("CREATE NAMESPACE graft_cat_rb.default")
-      sc.sql("CREATE TABLE graft_cat_rb.default.vecs (" +
-        "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-        "source STRING, text STRING) TBLPROPERTIES " +
-        "('graft.rowlevel.mode' = 'merge-on-read')")
-      sc.sql("ALTER TABLE graft_cat_rb.default.vecs ADD COLUMNS " +
-        "(vlabel INT, q ARRAY<BIGINT>)")
-      quantizedStaged(sc, dir).createOrReplaceTempView("q228_src")
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_rb.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q228_src WHERE $where")
-      }
+      val t = new Vecs(s, dir, graft.core.Fs.rotatingTempRoot("q228_annrb"),
+        "graft_cat_rb", mor = true)
+      import t.{ins, sc}
       ins("vec_id % 10 <> 0")
       graft.core.Phases("build") {
         sc.sql("CALL graft_cat_rb.system.ann_build(" +
@@ -3114,14 +2359,12 @@ object EmbedOps {
       graft.core.Phases("sync") {
         sc.sql("CALL graft_cat_rb.system.ann_sync('default.vecs', 'q')")
       }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
       val rb = graft.core.Phases("rebuild") {
         sc.sql("CALL graft_cat_rb.system.ann_rebuild(" +
           "'default.vecs', 'q')").head()
       }
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
-      val L = graft.sources.AnnIndex.load(idxRoot)
+      val idxRoot = AnnIndex.dirFor(t.path, "q")
+      val L = AnnIndex.load(idxRoot)
       // the swap's post-state, asserted in-gate: ONLY the new era
       // base serves (cursor at the rebuild head, no pending layers),
       // and the old era's dirs are physically unreachable AND gone
@@ -3134,10 +2377,7 @@ object EmbedOps {
           "graft_cat_rb.default.vecs WHERE doc_id < 5")
         .select(col("doc_id").as("qid"), col("q").as("qv"),
           col("n_chars").as("qn"))
-      val out = graft.core.Phases("serve") {
-        graft.sources.AnnIndex.serve(sc, tablePath, "q", qs)
-          .withColumn("cell", col("cell").cast("int"))
-      }
+      val out = graft.core.Phases("serve") { annServe(sc, t.path, qs) }
       out.persist()
       out
     },
@@ -3156,25 +2396,16 @@ object EmbedOps {
         "is_new, cosine) plus the family-routing value (NULL here — " +
         "plain index), driver-materialized because top-k over a query " +
         "batch is queries x k rows by contract. The oracle is SHARED " +
-        "with q207/q212/q217/q223 (annIncOracle) — five independent " +
-        "faces of the same serve contract now pin each other. At " +
+        "with q207/q212/q217/q223 (annIncOracle) — five faces of the " +
+        "one engine serve contract pin each other. At " +
         "100 TB: an analyst answers a similarity question with one " +
         "CALL next to the SELECTs they already write — no Scala, no " +
         "notebook plumbing.",
       Some(annIncOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q229_annsearch")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_as" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_as.root" ->
-          root.resolve("cat").toString)
+      val t = new Vecs(s, dir,
+        graft.core.Fs.rotatingTempRoot("q229_annsearch"), "graft_cat_as")
+      import t.{ins, sc}
       graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_as.default")
-        sc.sql("CREATE TABLE graft_cat_as.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_as.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
         // the query table: same id/vector column NAMES as the indexed
         // table — that correspondence IS the query shape contract
         sc.sql("CREATE TABLE graft_cat_as.default.queries (" +
@@ -3182,12 +2413,6 @@ object EmbedOps {
           "source STRING, text STRING)")
         sc.sql("ALTER TABLE graft_cat_as.default.queries " +
           "ADD COLUMNS (q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q229_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_as.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q229_src WHERE $where")
       }
       ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
@@ -3203,7 +2428,7 @@ object EmbedOps {
       }
       graft.core.Phases("dml") {
         sc.sql("INSERT INTO graft_cat_as.default.queries " +
-          "SELECT vec_id, nn, 'x', 's', '', q FROM q229_src " +
+          "SELECT vec_id, nn, 'x', 's', '', q FROM graft_cat_as_src " +
           "WHERE vec_id % 10 <> 0 AND vec_id < 5")
       }
       val hits = graft.core.Phases("search") {
@@ -3420,92 +2645,194 @@ object EmbedOps {
         FROM r WHERE rnk <= 3 OR nrnk = 1
         ORDER BY query_id, rnk"""
 
-  /** The incremental index's BASE layer (q113's build over the
-    * vec_id % 10 <> 0 slice), materialized once per source dir. */
-  /** (label, sv: array<long>, c) — the integer centroid table of a
-    * (vec_id, q, nn, label) frame. ONE definition for every builder
-    * (base index, filtered layouts, from-scratch audit rebuilds): a
-    * drift between two copies of this fold would silently break the
-    * serve==rebuild and serve==oracle equalities the gates pin. */
-  private def centroidTable(df: DataFrame): DataFrame =
-    graft.sources.AnnIndex.centroidTable(df)
+  /** The docstore `vecs` table the ANN lifecycle gates index, in a
+    * scoped catalog `cat` rooted at `root`: the embeddings corpus
+    * quantized once ([[quantizedStaged]]) and committed through SQL —
+    * doc_id = vec_id, n_chars = the squared norm, vlabel = the cell
+    * label; `src` adds q218's skewed filter column. */
+  private final class Vecs(s: SparkSession, dir: String,
+      root: java.nio.file.Path, cat: String, mor: Boolean = false,
+      src: Boolean = false) {
+    val sc: SparkSession = graft.core.Sessions.scoped(s,
+      s"spark.sql.catalog.$cat" ->
+        classOf[graft.sources.DocStoreCatalog].getName,
+      s"spark.sql.catalog.$cat.root" -> root.resolve("cat").toString)
+    val path: String =
+      root.resolve("cat").resolve("default").resolve("vecs").toString
+    private val srcCol = if (src) "src INT, " else ""
+    graft.core.Phases("setup") {
+      sc.sql(s"CREATE NAMESPACE $cat.default")
+      sc.sql(s"CREATE TABLE $cat.default.vecs (" +
+        "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
+        "source STRING, text STRING)" + (if (!mor) "" else
+          " TBLPROPERTIES ('graft.rowlevel.mode' = 'merge-on-read')"))
+      sc.sql(s"ALTER TABLE $cat.default.vecs ADD COLUMNS " +
+        s"(vlabel INT, ${srcCol}q ARRAY<BIGINT>)")
+      val staged = quantizedStaged(sc, dir)
+      (if (!src) staged else staged.withColumn("src",
+          when(col("label") <= 1, lit(0L))
+            .otherwise(lit(1L) + pmod(col("vec_id"), lit(2)))))
+        .createOrReplaceTempView(s"${cat}_src")
+    }
+    def ins(where: String): Unit = graft.core.Phases("dml") {
+      sc.sql(s"INSERT INTO $cat.default.vecs SELECT vec_id, nn, 'x', " +
+        s"'s', '', CAST(label AS INT), ${srcCol.replace(" INT", "")}q " +
+        s"FROM ${cat}_src WHERE $where")
+      ()
+    }
+    def del(where: String): Unit = graft.core.Phases("dml") {
+      sc.sql(s"DELETE FROM $cat.default.vecs WHERE $where")
+      ()
+    }
+    def build(filterCol: String = "", keyedByLabel: Boolean = false): Unit =
+      graft.core.Phases("build") {
+        AnnIndex.build(path, "doc_id", "q", "vlabel", filterCol, keyedByLabel)
+        ()
+      }
+  }
 
-  /** (label, dv: array<long>, dc) — a fragment's per-cell integer
-    * aggregates, computed from the read-back fragment rows (the r15
-    * unpersist shape). Shared by the upsert delta, the multi-fragment
-    * LSM fixture, and the tombstone fixture. */
-  private def fragmentAggregates(back: DataFrame): DataFrame =
-    graft.sources.AnnIndex.fragmentAggregates(back)
+  /** An engine-built lifecycle state — a [[Vecs]] table plus its `_ann/q`
+    * index after `steps` — Scratch-materialized once per source dir and
+    * returned as the table path. Gates serve it read-only or mutate an
+    * [[annCopy]] of it. */
+  private def annState(s: SparkSession, dir: String, name: String,
+      mor: Boolean = false, src: Boolean = false)(steps: Vecs => Unit)
+      : String =
+    java.nio.file.Paths.get(graft.core.Scratch.materialize(name,
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      steps(new Vecs(s, dir, java.nio.file.Paths.get(p), "graft_cat_fx",
+        mor, src))
+    }, "cat", "default", "vecs").toString
 
-  private def ivfIncBase(s: SparkSession, dir: String): String =
-    graft.core.Scratch.materialize("ivf_index_inc",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val base = quantized(s, dir).filter(col("vec_id") % 10 =!= 0)
-      centroidTable(base).write.mode("overwrite")
-        .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-      clusterForWrite(base, "label").write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
+  /** q207's state: the base slice (vec_id % 10 <> 0) built, ONE arrival
+    * commit synced into one fragment against the pinned quantizer. */
+  private[graft] def annUpsertState(s: SparkSession, dir: String): String =
+    annState(s, dir, "ann_upsert") { t =>
+      t.ins("vec_id % 10 <> 0")
+      t.build()
+      t.ins("vec_id % 10 = 0")
+      AnnIndex.sync(t.path, "q")
     }
 
-  /** The upsert batch as a MANAGED delta fragment (r15 verdict item
-    * 2): assignment runs against the broadcast stored centroids, the
-    * assigned batch persists cell-partitioned under `vectors/`, and
-    * the per-cell integer sums/counts the centroid update needs
-    * persist under `dcent/` — computed by READING THE FRAGMENT BACK
-    * (not by re-running or caching the assignment; the r15 advice's
-    * unpersist shape). Everything here is new-batch-sized. */
-  private def annIncDelta(s: SparkSession, dir: String): String = {
-    val idx = ivfIncBase(s, dir)
-    graft.core.Scratch.materialize("ivf_inc_delta",
-      s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val centroids = s.read.parquet(s"$idx/centroids")
-      // arrivals are UNLABELED as far as the index is concerned — the
-      // cell is the assignment's output, not an input
-      val newb = quantized(s, dir).filter(col("vec_id") % 10 === 0)
-        .drop("label")
-      val ad = newb.crossJoin(broadcast(withCentNorm(centroids)))
-        .withColumn("d", cellDist(col("q"), col("sv"), col("c"),
-          col("nn"), col("sn")))
-      val wa = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d").asc, col("label").asc)
-      clusterForWrite(ad.withColumn("ar", row_number().over(wa))
-          .filter(col("ar") === 1)
-          .select(col("vec_id"), col("q"), col("nn"), col("label")), "label")
-        .write.partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "vectors").toString)
-      fragmentAggregates(back).write
-        .parquet(java.nio.file.Paths.get(p, "dcent").toString)
+  /** q212's state: [[annUpsertState]] after the nightly fold. */
+  private def annFoldedState(s: SparkSession, dir: String): String = {
+    val pristine = annUpsertState(s, dir)
+    java.nio.file.Paths.get(graft.core.Scratch.materialize(
+      "ann_upsert_folded",
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val copy = java.nio.file.Paths.get(p, "vecs")
+      graft.core.Fs.copyRecursively(java.nio.file.Paths.get(pristine), copy)
+      AnnIndex.fold(copy.toString, "q")
+      ()
+    }, "vecs").toString
+  }
+
+  /** q217's state: the same slices, the arrivals in THREE commits
+    * synced into three fragments — assigned against the PINNED base
+    * quantizer, so they equal one big batch (the FAISS/Milvus posture
+    * that lets q207/q212/q217 share one oracle). */
+  private[graft] def annLsmState(s: SparkSession, dir: String): String =
+    annState(s, dir, "ann_lsm") { t =>
+      t.ins("vec_id % 10 <> 0")
+      t.build()
+      (0 to 2).foreach(k =>
+        t.ins(s"vec_id % 10 = 0 AND pmod(vec_id div 10, 3) = $k"))
+      AnnIndex.sync(t.path, "q")
+    }
+
+  /** q221's state: the base slice built, then a merge-on-read DELETE of
+    * vec_id % 7 = 3 synced into one tombstone fragment — delete
+    * requests CARRY their rows on the change feed, so the tombstone is
+    * cell-partitioned with zero lookups. */
+  private[graft] def annTombState(s: SparkSession, dir: String): String =
+    annState(s, dir, "ann_tomb", mor = true) { t =>
+      t.ins("vec_id % 10 <> 0")
+      t.build()
+      t.del("doc_id % 7 = 3")
+      AnnIndex.sync(t.path, "q")
+    }
+
+  /** A per-invocation copy of a pristine [[annState]] table, index
+    * included, for the gates whose lifecycle mutates it (the previous
+    * invocation's copy is reclaimed). */
+  private def annCopy(pristine: String, key: String): String = {
+    val copy = graft.core.Fs.rotatingTempRoot(key).resolve("vecs")
+    graft.core.Phases("setup") {
+      graft.core.Fs.copyRecursively(java.nio.file.Paths.get(pristine), copy)
+    }
+    copy.toString
+  }
+
+  /** (qid, qv, qn) of the base rows vec_id < 5 — the lifecycle gates'
+    * query batch, read from the index's base layer (every sub-index's,
+    * for a filtered family). */
+  private def annQueries(s: SparkSession, path: String): DataFrame = {
+    val root = AnnIndex.dirFor(path, "q")
+    val roots = if (!AnnIndex.isFamily(root)) Seq(root) else {
+      val fam = AnnIndex.loadFamily(root)
+      fam.subs.map(fam.subRoot)
+    }
+    roots.map(r => s.read.parquet(AnnIndex.load(r).baseVectors))
+      .reduce(_.unionByName(_))
+      .filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
+  }
+
+  /** The engine serve of `qs` (top-3 plus each query's best new
+    * neighbor), its cells cast to the oracles' INT label. */
+  private def annServe(s: SparkSession, path: String, qs: DataFrame,
+      filter: Option[Long] = None): DataFrame =
+    AnnIndex.serve(s, path, "q", qs, filter = filter)
+      .withColumn("cell", col("cell").cast("int"))
+
+  /** The CDC gates' plain top-3 shape: no best-new extras, no is_new. */
+  private def top3(served: DataFrame): DataFrame =
+    served.filter(col("rnk") <= 3).drop("is_new")
+
+  /** Drive the index from the table's CHANGE DATA FEED STREAM, starting
+    * past its synced cursor: each commit arrives as ONE foreachBatch
+    * micro-batch (version-paced offsets), which syncs the index through
+    * exactly its own commit version — a fragment for its inserts, a
+    * tombstone for its deletes, the integer centroid state folded by
+    * both. Batch + metadata per commit; no step rescans the corpus. */
+  private def streamSync(s: SparkSession, path: String): Unit = {
+    val from = AnnIndex.load(AnnIndex.dirFor(path, "q")).synced + 1
+    val q = s.readStream.format("graft-docstore")
+      .option("path", path)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", from.toString)
+      .load()
+      .writeStream
+      .option("checkpointLocation",
+        java.nio.file.Paths.get(path).resolveSibling("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (_: DataFrame, batchId: Long) =>
+        // the source paces offsets one table version per micro-batch,
+        // so batch b of this fresh stream carries version from + b; the
+        // engine reads that version's change rows through the batch
+        // face of the same CDC planner (stream == batch by construction)
+        AnnIndex.sync(path, "q", upTo = from + batchId)
+        () : Unit
+      }
+      .start()
+    graft.core.Phases("stream") {
+      try q.awaitTermination() finally q.stop()
     }
   }
 
-  /** Stored centroids + the fragment's per-cell integer sums/counts —
-    * the associative fold both serving (q207) and the nightly fold
-    * (q212) publish. The N = 1 case of [[foldedCentroidsAll]]. */
-  private def foldedCentroids(s: SparkSession, idx: String,
-      delta: String): DataFrame =
-    foldedCentroidsAll(s, idx, Seq(s"$delta/dcent"))
+  /** The freshness audit's from-scratch side: the serve of a fresh
+    * build over the table's current snapshot — centroids re-derived
+    * from the snapshot, never from the maintained state (auditing that
+    * state against itself would be vacuous). */
+  private def rebuiltServe(s: SparkSession, path: String, qs: DataFrame)
+      : DataFrame =
+    AnnIndex.serveSnapshot(s, path, "q", qs)
+      .withColumn("cell", col("cell").cast("int"))
 
-  /** The fold's INPUT frame — base rows of AFFECTED cells only
-    * (partition pruning; untouched cells are never read) unioned with
-    * the delta fragment, is_new preserved. graft-visible so
-    * PlanAuditSpec can pin the pruned plan directly. The N = 1 case
-    * of [[annLsmFoldInput]]. */
-  private[graft] def annFoldInput(s: SparkSession, idx: String,
-      delta: String): DataFrame =
-    annLsmFoldInput(s, idx, Seq(s"$delta/vectors"))
-
-  /** graft-visible fixture accessors for the fold plan audit. */
-  private[graft] def annIncPaths(s: SparkSession, dir: String)
-      : (String, String) = (ivfIncBase(s, dir), annIncDelta(s, dir))
-
-  /** Shared DuckDB oracle of the filtered-LSM pair: q225 runs the
-    * lifecycle gate-locally, q226 runs it through the catalog's
-    * ann_* procedures over a docstore table — the SAME slices, the
-    * same assignment and add/subtract maintenance, so one oracle pins
-    * both (and the two implementations pin each other). */
+  /** Shared DuckDB oracle of the filtered-LSM pair: q225 drives the
+    * engine lifecycle through its Scala API, q226 through the catalog's
+    * ann_* procedures — the SAME slices, the same assignment and
+    * add/subtract maintenance, so one oracle pins both. */
   private lazy val filteredLsmOracle: String = s"""
         WITH v AS (SELECT vec_id, label, $oQuant AS q FROM embeddings),
         n0 AS (SELECT vec_id, label, q, $oNorm2 AS nn FROM v),
@@ -3619,94 +2946,6 @@ object EmbedOps {
           FROM r1 WHERE rnk <= 3
         ) ORDER BY flt_src, query_id, rnk"""
 
-  /** The filtered-LSM fixture (q225): BASE slice (vec_id % 10 <> 0)
-    * laid out src=<k>/label=<cell>/ with per-src centroid tables over
-    * the base only (the pinned per-src quantizers), plus the held-out
-    * src-0 arrival batch (vec_id % 10 = 0 in the src-0 stratum,
-    * unassigned — assignment is the upsert's job). Pristine and
-    * immutable; the lifecycle writes fragments under a per-invocation
-    * temp root, never here. */
-  private[graft] def filteredLsmIdx(s: SparkSession, dir: String): String =
-    graft.core.Scratch.materialize("ivf_filtered_lsm",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val v = quantized(s, dir).withColumn("src",
-        when(col("label") <= 1, lit(0L))
-          .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-      clusterForWrite(v.filter(col("vec_id") % 10 =!= 0), "src", "label")
-        .write.partitionBy("src", "label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "vectors").toString)
-      clusterForWrite((0L to 2L).map(k =>
-          centroidTable(back.filter(col("src") === k).drop("src"))
-            .withColumn("src", lit(k)))
-        .reduce(_.unionByName(_)), "src")
-        .write.partitionBy("src")
-        .parquet(java.nio.file.Paths.get(p, "scentroids").toString)
-      v.filter(col("vec_id") % 10 === 0 && col("src") === 0).drop("src")
-        .write.parquet(java.nio.file.Paths.get(p, "arrivals").toString)
-    }
-
-  /** (vec_id, q, nn, label) projection of the CDC gates' vecs table
-    * (q214 freshness / q222 forget share one table layout). */
-  private def cdcVecsOf(df: DataFrame): DataFrame = df.select(
-    col("doc_id").as("vec_id"), col("q"),
-    col("n_chars").as("nn"), col("vlabel").as("label"))
-
-  /** Driver-collected per-cell integer aggregates — the CDC gates'
-    * metastore-sized centroid-state entries. */
-  private def cdcCellAgg(df: DataFrame): Array[(Int, Seq[Long], Long)] =
-    centroidTable(df).collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2)))
-
-  /** The CDC maintenance gates' serve: probe `cents`, prune the pool
-    * to probed cells, exact rerank top-3. Cells with c <= 0 never
-    * probe (r17 review): a maintenance batch that empties a cell
-    * leaves a ZERO centroid whose probe distance is exactly 0, so the
-    * dead cell would win a probe slot while contributing no
-    * candidates — and the from-scratch oracle, built over survivors
-    * only, never sees the label at all. */
-  private[graft] def annStateServe(qs: DataFrame, cents0: DataFrame,
-      pool: DataFrame): DataFrame =
-    annStateServeBy(qs, cents0,
-      cells => pool.filter(col("label").isin(cells: _*)))
-
-  /** The pool-resolution variant: `poolOf` receives the probed cell
-    * ids and builds the (already pruned) candidate pool — the hook
-    * the manifest-layered gates (q221) route overlay-vs-base reads
-    * through. ONE serve definition for every state-probing gate.
-    * The probe runs ONCE ([[graft.sources.AnnIndex.probePairs]] — the
-    * r19 serveOne shape): without it the final top-k job re-executed
-    * the whole probe subtree (crossJoin + window) building its
-    * broadcast, so every serve paid the probe twice (r22 phase
-    * attribution: serve_pre/serve_post dominated the lifecycle
-    * gates). probeCells filters c > 0 exactly as this serve did. */
-  private[graft] def annStateServeBy(qs: DataFrame, cents0: DataFrame,
-      poolOf: Seq[Any] => DataFrame): DataFrame = {
-    val (cells, probe) = graft.sources.AnnIndex.probePairs(
-      qs.sparkSession, qs, cents0, 2)
-    val pruned = poolOf(cells.map(c => c: Any))
-    val cand = pruned.join(broadcast(probe),
-        pruned("label") === probe("label") &&
-          col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
-    val wr = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= 3)
-      .select(col("qid").as("query_id"), col("rnk"),
-        col("vec_id").as("neighbor_id"),
-        pruned("label").as("cell"),
-        round(col("cos"), 6).as("cosine"))
-  }
-
-  /** The LSM gates' layer manifest — the ONE shared definition now
-    * lives in [[graft.sources.AnnIndex.Manifest]] (r17 verdict item 2
-    * promoted the whole lifecycle to a first-class docstore object);
-    * the gate-local alias keeps q217/q221 reading naturally. */
-  private type LsmManifest = graft.sources.AnnIndex.Manifest
-
   /** Row-by-row freshness audit: the maintained serve joined against
     * a from-scratch rebuild (whose centroids MUST be derived from the
     * current snapshot, not the maintained state — auditing the state
@@ -3729,112 +2968,4 @@ object EmbedOps {
           col("cosine") === col("r_cosine")).as("fresh"))
       .orderBy("query_id", "rnk")
   }
-
-  /** (base index, pristine tombstone fragment) for q221 and its plan
-    * audit. The fragment is Scratch-immutable: delete requests ride
-    * the corpus CDF with their rows, so it lands cell-partitioned
-    * (`keys/`) WITH the per-cell integer aggregates to subtract
-    * (`dcent/`) — the compaction lifecycle operates on per-invocation
-    * COPIES. */
-  private[graft] def annTombPaths(s: SparkSession, dir: String)
-      : (String, String) = {
-    val idx = ivfIncBase(s, dir)
-    val pristine = graft.core.Scratch.materialize("ivf_tomb_frag",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val dead = s.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") % 7 === 3)
-      clusterForWrite(dead.select(col("vec_id"), col("label")), "label")
-        .write.partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "keys").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "keys").toString)
-        .join(s.read.parquet(s"$idx/vectors"), Seq("vec_id", "label"))
-      fragmentAggregates(back).write.parquet(
-        java.nio.file.Paths.get(p, "dcent").toString)
-    }
-    (idx, pristine)
-  }
-
-  /** THREE accumulated delta fragments (q217's LSM lifecycle input),
-    * each an upsert batch assigned against the PINNED base coarse
-    * quantizer — the FAISS/Milvus posture: the cell space is fixed at
-    * build time, so fold results are arrival-order-independent and
-    * the union of N fragments assigns exactly like one big batch
-    * (which is what lets q207/q212/q217 share one oracle). Pristine
-    * and immutable (Scratch): the retire lifecycle operates on
-    * per-invocation COPIES. */
-  private[graft] def annLsmFrags(s: SparkSession, dir: String): String = {
-    val idx = ivfIncBase(s, dir)
-    graft.core.Scratch.materialize("ivf_lsm_frags",
-      s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val centroids = s.read.parquet(s"$idx/centroids")
-      (0 to 2).foreach { k =>
-        val batch = quantized(s, dir)
-          .filter(col("vec_id") % 10 === 0 &&
-            pmod(expr("vec_id div 10"), lit(3)) === k)
-          .drop("label")
-        val ad = batch.crossJoin(broadcast(withCentNorm(centroids)))
-          .withColumn("d", cellDist(col("q"), col("sv"), col("c"),
-            col("nn"), col("sn")))
-        val wa = Window.partitionBy(col("vec_id"))
-          .orderBy(col("d").asc, col("label").asc)
-        val vecs = java.nio.file.Paths.get(p, s"frag-$k", "vectors")
-        clusterForWrite(ad.withColumn("ar", row_number().over(wa))
-            .filter(col("ar") === 1)
-            .select(col("vec_id"), col("q"), col("nn"), col("label")),
-            "label")
-          .write.partitionBy("label").parquet(vecs.toString)
-        // per-fragment integer centroid aggregates, read BACK from
-        // the fragment (the same unpersist shape as annIncDelta)
-        val back = s.read.parquet(vecs.toString)
-        fragmentAggregates(back).write.parquet(
-          java.nio.file.Paths.get(p, s"frag-$k", "dcent").toString)
-      }
-    }
-  }
-
-  /** Base centroids + the SUMMED per-cell integer aggregates of N
-    * fragments — the associative fold at any fragment count (the
-    * N = 1 case is [[foldedCentroids]]). Metadata-sized on the
-    * fragment side: cells x (dim + 1) integers per fragment. */
-  private def foldedCentroidsAll(s: SparkSession, idx: String,
-      fragDcents: Seq[String]): DataFrame = {
-    // layer-by-layer broadcast zip_with joins, not union+posexplode-
-    // regroup (guide §2.4): each fragment's dcent is unique per label
-    // (fragmentAggregates groups by label), so sequential elementwise
-    // integer adds equal the summed form exactly and the fold carries
-    // ZERO shuffle exchanges — this frame runs inside every probe job
-    // of the multi-fragment gates (the AnnIndex.serveCentroids twin)
-    fragDcents.foldLeft(s.read.parquet(s"$idx/centroids")) { (acc, p) =>
-      acc.join(broadcast(s.read.parquet(p)), Seq("label"), "left")
-        .select(col("label"),
-          when(col("dv").isNull, col("sv"))
-            .otherwise(zip_with(col("sv"), col("dv"), (a, b) => a + b))
-            .as("sv"),
-          (col("c") + coalesce(col("dc"), lit(0L))).as("c"))
-    }
-  }
-
-  /** The multi-fragment fold's INPUT frame — ONE pass over base rows
-    * of AFFECTED cells (partition-pruned; untouched cells never read)
-    * plus every accumulated fragment, is_new preserved. graft-visible
-    * so PlanAuditSpec pins the pruned plan over the pristine
-    * fixture. */
-  private[graft] def annLsmFoldInput(s: SparkSession, idx: String,
-      fragVecDirs: Seq[String]): DataFrame = {
-    val frags = fragVecDirs.map(p => s.read.parquet(p))
-      .reduce(_.unionByName(_))
-    val affected = frags.select("label").distinct().collect().map(_.get(0))
-    s.read.parquet(s"$idx/vectors")
-      .filter(col("label").isin(affected: _*))
-      .withColumn("is_new", lit(false))
-      .unionByName(frags.withColumn("is_new", lit(true)))
-  }
-
-  /** Shared serve tail of the incremental pair: exact cosine rerank
-    * inside the probed pool, top-3 overall PLUS each query's best NEW
-    * neighbor (at its overall rank) — the upserted-vectors-are-
-    * searchable proof even when arrivals don't crack the top-3. */
-  private def annIncServe(pool: DataFrame, probe: DataFrame): DataFrame =
-    graft.sources.AnnIndex.topKWithBestNew(pool, probe, 3)
 }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
-/** First-class IVF ANN index over a docstore table — the promotion of
-  * the gate-local LSM lifecycle (q207 upsert, q212/q217 fold+retire,
-  * q221 tombstones, q214/q222 CDC maintenance) to a cataloged engine
-  * object with a DDL/procedure surface (r17 verdict item 2):
+/** First-class IVF ANN index over a docstore table — the ONE
+  * implementation of the LSM lifecycle (upsert, fold+retire,
+  * tombstones, CDC maintenance) behind a DDL/procedure surface; the
+  * EmbedOps lifecycle gates (q207/q212/q214/q217/q221-q229) all drive
+  * it:
   *
   * {{{
   *   CALL cat.system.ann_build('ns.t', 'doc_id', 'vec', 'cell')
@@ -68,7 +69,7 @@ object AnnIndex {
 
   // ------------------------------------------------------------------
   // canonical vector math — ONE definition engine-wide (the gate suite
-  // in graft.queries.EmbedOps delegates here; a drift between two
+  // in graft.queries.EmbedOps uses it too; a drift between two
   // copies of these folds would silently break serve == oracle)
   // ------------------------------------------------------------------
 
@@ -194,9 +195,9 @@ object AnnIndex {
       .select(col("qid"), col("label"), col("qv"), col("qn"))
   }
 
-  /** Serve tail shared with the gate suite: exact cosine rerank inside
-    * the probed pool, top-k overall PLUS each query's best NEW
-    * neighbor at its overall rank — the upserted-vectors-are-
+  /** The one serve tail (index and snapshot serves): exact cosine
+    * rerank inside the probed pool, top-k overall PLUS each query's
+    * best NEW neighbor at its overall rank — the upserted-vectors-are-
     * searchable proof even when arrivals don't crack the top-k. */
   def topKWithBestNew(pool: DataFrame, probe: DataFrame, k: Int): DataFrame = {
     val cand = pool.join(broadcast(probe),
@@ -219,8 +220,7 @@ object AnnIndex {
 
   // ------------------------------------------------------------------
   // manifest — `<kind>,<path>` lines, atomic-rename publish, retained
-  // version copies (the q217/q221 LsmManifest, promoted to ONE shared
-  // definition)
+  // version copies
   // ------------------------------------------------------------------
 
   final class Manifest(val root: Path) {
@@ -274,7 +274,7 @@ object AnnIndex {
     * newest) order. */
   final case class Layers(root: Path, idCol: String, vecCol: String,
       labelCol: String, synced: Long, base: String, folds: Seq[String],
-      frags: Seq[String], tombs: Seq[String]) {
+      frags: Seq[String], tombs: Seq[String], keyedByLabel: Boolean) {
     def abs(rel: String): String = root.resolve(rel).toString
     def baseVectors: String = abs(s"$base/vectors")
     def baseCentroids: String = abs(s"$base/centroids")
@@ -295,8 +295,12 @@ object AnnIndex {
       base = es.collectFirst { case ("base", p) => p }.getOrElse("base"),
       folds = es.collect { case ("fold", p) => p },
       frags = es.collect { case ("frag", p) => p },
-      tombs = es.collect { case ("tomb", p) => p })
+      tombs = es.collect { case ("tomb", p) => p },
+      keyedByLabel = es.contains(KeyedByLabel))
   }
+
+  /** Manifest line of a label-keyed index (see [[build]]). */
+  private val KeyedByLabel = ("cells", "label")
 
   // ------------------------------------------------------------------
   // filtered-index family: one SELF-CONTAINED sub-index per filter
@@ -366,14 +370,12 @@ object AnnIndex {
 
   /** Assign unlabeled arrivals against the PINNED base centroids —
     * argmin of the count-normalized [[cellDist]], ties by label.
-    * graft-visible: the filtered-index gate (q225) assigns against
-    * per-src centroid slices through the same single definition. */
-  /** `carry` columns ride through the assignment (the windowed sync
+    * `carry` columns ride through the assignment (the windowed sync
     * carries `_commit_version` so ONE assignment job serves every
     * version's arrivals); they join the argmin window's partition key
     * because the same vec_id may legitimately recur across versions
     * (delete + re-insert) and each occurrence assigns independently. */
-  private[graft] def assign(batch: DataFrame, baseCents: DataFrame,
+  private def assign(batch: DataFrame, baseCents: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
     val ad = batch.drop("label")
       .crossJoin(broadcast(withCentNorm(baseCents)))
@@ -399,9 +401,19 @@ object AnnIndex {
     * pinned quantizer, lifecycle) under `src=<k>/` — the q218/q225
     * per-slice posture made structural. Still one corpus pass: the
     * snapshot writes src/label-partitioned into a staging dir whose
-    * src partitions RENAME into the sub-index roots. */
+    * src partitions RENAME into the sub-index roots.
+    *
+    * With `keyedByLabel` (plain indexes only) the label column stays
+    * the cell of EVERY row, arrivals included: sync files inserts
+    * under their own label instead of assigning them against the
+    * pinned quantizer (the partition-key posture), so the maintained
+    * index always equals a fresh build over the current snapshot —
+    * the contract the CDC freshness gates (q214/q224) audit. */
   def build(tablePath: String, idCol: String, vecCol: String,
-      labelCol: String, filterCol: String = ""): BuildStats = {
+      labelCol: String, filterCol: String = "",
+      keyedByLabel: Boolean = false): BuildStats = {
+    require(filterCol.isEmpty || !keyedByLabel,
+      "a filtered family always assigns arrivals per sub-index")
     val s = SparkSession.active
     val root = dirFor(tablePath, vecCol)
     val m = new Manifest(root)
@@ -445,8 +457,9 @@ object AnnIndex {
               { r = v.agg(count_distinct(col("label")), count(lit(1))).head() }))
         }
         DocStoreCommitOps.withCommitLock(root.toString) {
-          m.publish(Seq(("cols", s"$idCol|$vecCol|$labelCol"),
-            ("synced", head.toString), ("base", "base")), 0)
+          m.publish(Seq(("cols", s"$idCol|$vecCol|$labelCol")) ++
+            Seq(KeyedByLabel).filter(_ => keyedByLabel) ++
+            Seq(("synced", head.toString), ("base", "base")), 0)
         }
         BuildStats(root.toString, head, r.getLong(0), r.getLong(1))
       } finally { v.unpersist(); () }
@@ -579,13 +592,18 @@ object AnnIndex {
     * `_commit_version`), but the index still commits its manifest
     * ONCE PER TABLE VERSION with the synced cursor conflict-checked —
     * the crash contract is untouched: a re-run resumes from `synced`
-    * and re-reads only the remaining window. */
-  def sync(tablePath: String, vecCol: String): SyncStats = {
+    * and re-reads only the remaining window.
+    *
+    * `upTo` bounds the window at that table version — the face a
+    * change-feed driver uses to sync exactly through its micro-batch's
+    * commit, one index cadence step per stream batch. */
+  def sync(tablePath: String, vecCol: String,
+      upTo: Long = Long.MaxValue): SyncStats = {
     val s = SparkSession.active
     val root = dirFor(tablePath, vecCol)
-    if (isFamily(root)) return syncFamily(s, tablePath, root)
+    val head = math.min(DocStoreCommitOps.nextVersion(tablePath) - 1, upTo)
+    if (isFamily(root)) return syncFamily(s, tablePath, root, head)
     val start = load(root)
-    val head = DocStoreCommitOps.nextVersion(tablePath) - 1
     if (head <= start.synced)
       return SyncStats(start.synced, start.synced, 0, 0, 0, 0)
     val baseCents = baseCentroidsOf(s, start)
@@ -606,7 +624,7 @@ object AnnIndex {
       val routed = routeCounts(proj, Seq(col("_commit_version")),
         r => r.getLong(0))
       val (frags, tombs, nIns, nDel) = syncRange(s, root, baseCents,
-        proj, (start.synced + 1) to head, routed)
+        proj, (start.synced + 1) to head, routed, start.keyedByLabel)
       SyncStats(start.synced, head, frags, tombs, nIns, nDel)
     } finally { proj.unpersist(); () }
   }
@@ -649,7 +667,8 @@ object AnnIndex {
     * its predecessor, so every earlier version must have committed. */
   private def syncRange(s: SparkSession, root: Path,
       baseCents: DataFrame, proj: DataFrame, versions: Seq[Long],
-      routed: Map[Long, (Long, Long)]): (Long, Long, Long, Long) = {
+      routed: Map[Long, (Long, Long)], keyedByLabel: Boolean)
+      : (Long, Long, Long, Long) = {
     var frags = 0L; var tombs = 0L; var nIns = 0L; var nDel = 0L
     def routedOf(w: Long) = routed.getOrElse(w, (0L, 0L))
     val anyIns = versions.exists(w => routedOf(w)._1 > 0)
@@ -680,11 +699,15 @@ object AnnIndex {
     // (local mode shares one process anyway); the checkpointed blocks
     // are batch-sized and reclaimed by the ContextCleaner once the
     // call returns.
-    val assignedW = if (!anyIns) None else Some(
-      clusterForWrite(assign(proj.filter(
-          col("_change_type").isin("insert", "update_postimage")),
-        baseCents, carry = Seq("_commit_version")),
-        "_commit_version", "label").localCheckpoint())
+    val assignedW = if (!anyIns) None else Some {
+      val arrivals = proj.filter(
+        col("_change_type").isin("insert", "update_postimage"))
+      clusterForWrite(
+        if (keyedByLabel) arrivals.select(
+          Seq("vec_id", "q", "nn", "label", "_commit_version").map(col): _*)
+        else assign(arrivals, baseCents, carry = Seq("_commit_version")),
+        "_commit_version", "label").localCheckpoint()
+    }
     def fragSlice(w: Long): DataFrame =
       assignedW.get.filter(col("_commit_version") === w)
         .drop("_commit_version")
@@ -721,7 +744,8 @@ object AnnIndex {
             col("_change_type").isin("delete", "update_preimage"))
             .drop("_commit_version").persist()
           try {
-            val d = tombstoneVersion(s, root, baseCents, del, w)
+            val d = tombstoneVersion(s, root, baseCents, del, w,
+              keyedByLabel)
             commitSynced(root, w,
               (if (ri > 0) Seq(("frag", s"frag-$w")) else Seq.empty) ++
                 (if (d > 0) Seq(("tomb", s"tomb-$w")) else Seq.empty))
@@ -757,29 +781,33 @@ object AnnIndex {
     * to live index rows): keys + dcent from the same cached
     * resolution, written concurrently. Returns resolved-row count. */
   private def tombstoneVersion(s: SparkSession, root: Path,
-      baseCents: DataFrame, del: DataFrame, w: Long): Long = {
-    // the layer view as of version w-1 (already committed — the
-    // barrier), which includes fragments committed for EARLIER
-    // versions in this sync window (insert-then-delete across
-    // versions resolves). Deliberately NOT the fragment written for
-    // version w itself: a version's deletes target rows that existed
-    // BEFORE it — including the same-version fragment would make a
-    // same-cell UPDATE tombstone its own post-image and
-    // double-subtract the centroid state (review r18)
-    val cur = load(root)
-    // candidate cells: the label-column cell (build-time rows) and
-    // the pinned-quantizer cell (fragment rows) — at most two
-    // partitions read per deleted row, never the corpus
-    val candCells = graft.core.Phases("tomb_cells") {
-      del.select(col("label"))
-        .unionByName(assign(del, baseCents).select(col("label")))
-        .distinct().collect().map(_.getLong(0)).toSeq
-    }
+      baseCents: DataFrame, del: DataFrame, w: Long,
+      keyedByLabel: Boolean): Long = {
     val delKeys = del.select(col("vec_id"), col("q"))
-    val resolved = resolvePool(s, cur, candCells)
-      .select(col("vec_id"), col("label"))
-      .join(broadcast(delKeys.select("vec_id")), Seq("vec_id"))
-      .persist()
+    // a label-keyed index holds every live row in its label cell, so
+    // the pre-image IS the (vec_id, cell) key — no lookup
+    val resolved = (if (keyedByLabel) del.select(col("vec_id"), col("label"))
+      else {
+        // candidate cells: the label-column cell (build-time rows) and
+        // the pinned-quantizer cell (fragment rows) — at most two
+        // partitions read per deleted row, never the corpus
+        val candCells = graft.core.Phases("tomb_cells") {
+          del.select(col("label"))
+            .unionByName(assign(del, baseCents).select(col("label")))
+            .distinct().collect().map(_.getLong(0)).toSeq
+        }
+        // the layer view as of version w-1 (already committed — the
+        // barrier), which includes fragments committed for EARLIER
+        // versions in this sync window (insert-then-delete across
+        // versions resolves). Deliberately NOT the fragment written for
+        // version w itself: a version's deletes target rows that existed
+        // BEFORE it — including the same-version fragment would make a
+        // same-cell UPDATE tombstone its own post-image and
+        // double-subtract the centroid state (review r18)
+        resolvePool(s, load(root), candCells)
+          .select(col("vec_id"), col("label"))
+          .join(broadcast(delKeys.select("vec_id")), Seq("vec_id"))
+      }).persist()
     try {
       val resolvedN =
         graft.core.Phases("tomb_resolve") { resolved.count() }
@@ -853,11 +881,11 @@ object AnnIndex {
     }.toVector
   }
 
-  private[graft] def inParallelAll(thunks: Seq[() => Unit]): Unit = {
+  private def inParallelAll(thunks: Seq[() => Unit]): Unit = {
     inParallelMap(thunks)(t => t()); ()
   }
 
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit =
+  private def inParallel(a: => Unit, b: => Unit): Unit =
     inParallelAll(Seq(() => a, () => b))
 
   /** Cluster a cell-partitioned layer write by its partition column(s)
@@ -899,9 +927,8 @@ object AnnIndex {
     * change row whose filter value has no sub-index — or a NULL one —
     * refuses loudly; it would otherwise vanish from serving silently. */
   private def syncFamily(s: SparkSession, tablePath: String,
-      root: Path): SyncStats = {
+      root: Path, head: Long): SyncStats = {
     val fam = loadFamily(root)
-    val head = DocStoreCommitOps.nextVersion(tablePath) - 1
     val start = fam.subs.map(k => load(fam.subRoot(k)).synced).min
     if (head <= start) return SyncStats(start, start, 0, 0, 0, 0)
     val subCents = fam.subs.map(k =>
@@ -952,7 +979,7 @@ object AnnIndex {
             w -> perVerSub.getOrElse((w, k), (0L, 0L))).toMap
           syncRange(s, fam.subRoot(k), subCents(k),
             proj.filter(col("src") === k).drop("src"),
-            subVersions, subRouted)
+            subVersions, subRouted, keyedByLabel = false)
         }
       }
       SyncStats(start, head,
@@ -1071,7 +1098,7 @@ object AnnIndex {
     * put 3 shuffle exchanges inside EVERY probe job (serveCentroids
     * runs inside serve_plan); this form is exchange-free — pending
     * layers are few by the fold cadence, so the join chain stays
-    * shallow. q225's applyDelta is the same shape. */
+    * shallow. */
   def serveCentroids(s: SparkSession, L: Layers): DataFrame = {
     val sealed0 = L.folds.lastOption
       .map(f => s.read.schema(centroidSchema)
@@ -1118,6 +1145,22 @@ object AnnIndex {
         root0
     }
     serveOne(s, root, qs, nprobe, k)
+  }
+
+  /** What a from-scratch build over the table's CURRENT snapshot would
+    * serve for `qs`, computed without materializing one: centroids
+    * re-derived from the snapshot rows, the pool the probed cells of
+    * that snapshot. The freshness audits compare a maintained index
+    * against it — never against the maintained state itself. */
+  def serveSnapshot(s: SparkSession, tablePath: String, vecCol: String,
+      qs: DataFrame, nprobe: Int = 2, k: Int = 3): DataFrame = {
+    val L = load(dirFor(tablePath, vecCol))
+    val snap = project(s.read.format("graft-docstore")
+      .option("path", tablePath).load(), L.idCol, L.vecCol, L.labelCol)
+      .persist()
+    val (cells, probe) = probePairs(s, qs, centroidTable(snap), nprobe)
+    topKWithBestNew(snap.filter(col("label").isin(cells: _*))
+      .withColumn("is_new", lit(false)), probe, k)
   }
 
   /** MIXED-filter family serve (r19 verdict item 3): `qs` carries the
@@ -1176,12 +1219,10 @@ object AnnIndex {
     * [[MaxServePairs]]) and the probe frame rebuilds as
     * qs ⨝ broadcast(pairs), so the final top-k job replays a tiny
     * local join instead of re-executing the whole probe subtree
-    * (centroid fold + crossJoin + window) behind its broadcast. The
-    * r19 serveOne fix, factored out so the gate-local serves
-    * (EmbedOps q214/q217/q218/q221/q222/q224/q225) share it — r22
-    * phase attribution showed each of their serves still paying the
-    * probe twice (once for the cells collect, once rebuilding the
-    * broadcast). */
+    * (centroid fold + crossJoin + window) behind its broadcast (the
+    * r19 serveOne fix). Shared by [[serveOne]] and the static
+    * filtered-search gate q218, which probes per-src centroid tables
+    * outside any index lifecycle. */
   private[graft] def probePairs(s: SparkSession, qs: DataFrame,
       cents: DataFrame, nprobe: Int): (Seq[Long], DataFrame) = {
     // getAs[Number]: qid's type is the CALLER's (an Int qid worked
@@ -1337,14 +1378,25 @@ object AnnIndex {
     foldOne(s, root)
   }
 
-  private def foldOne(s: SparkSession, root: Path): FoldStats = {
-    val L = load(root)
-    if (L.frags.isEmpty && L.tombs.isEmpty)
-      return FoldStats(0, 0, 0, 0)
+  /** A fold's (affected cells, input frame): the cells holding pending
+    * fragment or tombstone rows (directory metadata only), and their
+    * current pool — newest layer per cell + fragments - tombstones,
+    * is_new preserved. Untouched cells are never read; PlanAuditSpec
+    * pins the pruned base scan and the broadcast tombstone mask. */
+  private[graft] def foldInput(s: SparkSession, L: Layers)
+      : (Set[Long], DataFrame) = {
     val affected = (L.frags.map(f => coveredCells(
         Paths.get(L.abs(s"$f/vectors")))) ++
       L.tombs.map(t => coveredCells(Paths.get(L.abs(s"$t/keys")))))
       .foldLeft(Set.empty[Long])(_ ++ _)
+    (affected, resolvePool(s, L, affected.toSeq))
+  }
+
+  private def foldOne(s: SparkSession, root: Path): FoldStats = {
+    val L = load(root)
+    if (L.frags.isEmpty && L.tombs.isEmpty)
+      return FoldStats(0, 0, 0, 0)
+    val (affected, input) = foldInput(s, L)
     val foldRel = s"fold-${new Manifest(root).currentVersion + 1}"
     // a crashed earlier attempt may have left this dir half-written
     // and unreachable (its manifest swap never ran) — clear it so the
@@ -1356,7 +1408,7 @@ object AnnIndex {
     // PRE-fold layer aggregates, not the new cells dir) — concurrent.
     graft.core.Phases("cells_write") {
       inParallel(
-        clusterForWrite(resolvePool(s, L, affected.toSeq), "label")
+        clusterForWrite(input, "label")
           .write.partitionBy("label")
           .parquet(root.resolve(foldRel).resolve("cells").toString),
         serveCentroids(s, L).write
@@ -1513,7 +1565,8 @@ object AnnIndex {
           centroidTable(v).write
             .parquet(root.resolve(era).resolve("centroids").toString),
           { r = v.agg(count_distinct(col("label")), count(lit(1))).head() }))
-      swapToEra(root, s"${L.idCol}|${L.vecCol}|${L.labelCol}", era, head)
+      swapToEra(root, Seq(("cols", s"${L.idCol}|${L.vecCol}|${L.labelCol}")) ++
+        Seq(KeyedByLabel).filter(_ => L.keyedByLabel), era, head)
       BuildStats(root.toString, head, r.getLong(0), r.getLong(1))
     } finally { v.unpersist(); () }
   }
@@ -1557,8 +1610,8 @@ object AnnIndex {
   /** The rebuild's atomic flip: publish a manifest whose ONLY layer
     * is the new era base, conflict-checked against concurrent index
     * commits, then delete the old era's now-unreachable layers. */
-  private def swapToEra(root: Path, cols: String, era: String,
-      head: Long): Unit =
+  private def swapToEra(root: Path, header: Seq[(String, String)],
+      era: String, head: Long): Unit =
     DocStoreCommitOps.withCommitLock(root.toString) {
       val m = new Manifest(root)
       val published = m.currentVersion + 1
@@ -1569,8 +1622,8 @@ object AnnIndex {
       // a brand-new family sub has no manifest yet — nothing to retire
       val old = if (!m.exists) Seq.empty else m.read().collect {
         case (k, p) if Set("base", "fold", "frag", "tomb")(k) => p }
-      m.publish(Seq(("cols", cols), ("synced", head.toString),
-        ("base", era)), published)
+      m.publish(header ++ Seq(("synced", head.toString), ("base", era)),
+        published)
       old.foreach(p => graft.core.Fs.deleteRecursively(root.resolve(p)))
       m.expireCopiesBelow(published)
     }
@@ -1627,7 +1680,7 @@ object AnnIndex {
         import s.implicits._
         mine.toDF("label", "sv", "c").coalesce(1).write
           .parquet(sub.resolve(era).resolve("centroids").toString)
-        swapToEra(sub, cols, era, head)
+        swapToEra(sub, Seq(("cols", cols)), era, head)
         cells += mine.size; vecs += mine.map(_._3).sum
       }
       graft.core.Fs.deleteRecursively(stage)

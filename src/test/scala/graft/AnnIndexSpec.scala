@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.AnnIndex
+import graft.sources.{AnnIndex, DocStoreCommitOps}
 
 /** The first-class ANN index lifecycle (build / sync / fold / drop via
   * the docstore procedure surface) against an INDEPENDENT plain-Scala
@@ -123,6 +123,35 @@ class AnnIndexSpec extends SparkSpec {
 
   // ---- tests ---------------------------------------------------------
 
+  test("engine probe never probes an emptied cell (c = 0 zero centroid)") {
+    // a maintenance batch that deletes EVERY vector of a cell leaves
+    // (sv = 0-vector, c = 0) in the subtracted state; its probe
+    // distance is exactly 0, so without the c > 0 guard the dead cell
+    // would win a probe slot for every query while contributing zero
+    // candidates (the lifecycle fixtures delete 1-in-7 per cell and
+    // never empty one, hence this synthetic pin)
+    import spark.implicits._
+    val dim = 4
+    // cell 0: EMPTIED (zero centroid, c = 0); cells 1, 2: live
+    val cents = Seq(
+      (0, Seq.fill(dim)(0L), 0L),
+      (1, Seq(1000L, 0L, 0L, 0L), 1L),
+      (2, Seq(0L, 1000L, 0L, 0L), 1L)).toDF("label", "sv", "c")
+    val pool = Seq(
+      (11L, Seq(1000L, 0L, 0L, 0L), 1000000L, 1),
+      (22L, Seq(0L, 1000L, 0L, 0L), 1000000L, 2)
+    ).toDF("vec_id", "q", "nn", "label").withColumn("is_new", lit(false))
+    val qs = Seq((99L, Seq(700L, 700L, 0L, 0L), 980000L))
+      .toDF("qid", "qv", "qn")
+    val (cells, probe) = AnnIndex.probePairs(spark, qs, cents, 2)
+    assert(cells.toSet == Set(1L, 2L), s"probed cells: $cells")
+    val out = AnnIndex.topKWithBestNew(pool, probe, 3).collect()
+    // both live cells probed (nprobe = 2), both candidates returned —
+    // the dead cell stole neither slot
+    assert(out.map(_.getLong(2)).toSet == Set(11L, 22L),
+      out.mkString(";"))
+  }
+
   test("mixed insert+delete sync: fragments, pruned tombstone lookup, " +
       "exact centroid maintenance, fold retires and serve is unchanged") {
     val (s, path) = freshCat("annmx")
@@ -190,6 +219,48 @@ class AnnIndexSpec extends SparkSpec {
         Paths.get(L.abs(s"${L.folds.head}/cells")).toString)
       .filter(col("vec_id").isin(2L, 101L)).count()
     assert(leaked == 0, s"$leaked tombstoned rows survived the fold")
+  }
+
+  test("label-keyed index: arrivals keep their label cell, a bounded " +
+      "sync stops at its version, and serve equals serveSnapshot") {
+    val (s, path) = freshCat("annkl")
+    ins(s, "annkl", base)
+    AnnIndex.build(path, "doc_id", "v", "cell", keyedByLabel = true)
+    val root = AnnIndex.dirFor(path, "v")
+    var state: Map[Long, (Vec, Long, Boolean)] =
+      base.map { case (id, cell, v) => id -> (v, cell, false) }.toMap
+    // commit A: an e1-direction arrival LABELED cell 2 — the pinned
+    // quantizer would assign it to cell 0; the keyed index keeps 2
+    val arrV: Vec = Array(1000L, 2L, 0L, 1L)
+    assert(assignCell(arrV, centroids(state)) == 0L)
+    ins(s, "annkl", Seq((101L, 2L, arrV)))
+    // commit B: delete a base row of cell 2
+    s.sql("DELETE FROM annkl.default.t WHERE doc_id = 21")
+    val head = DocStoreCommitOps.nextVersion(path) - 1
+    val sy = AnnIndex.sync(path, "v", upTo = head - 1)
+    assert(sy.toVersion == head - 1 && sy.fragments == 1 &&
+      sy.tombstones == 0, s"bounded sync: $sy")
+    assert(AnnIndex.load(root).synced == head - 1)
+    assert(Files.exists(root.resolve(s"frag-${head - 1}")
+      .resolve("vectors").resolve("label=2")),
+      "the keyed arrival must file under its own label")
+    state += 101L -> (arrV, 2L, true)
+    checkServe(s, path, Array(1000L, 2L, 0L, 1L), state)
+    checkServe(s, path, Array(0L, 3L, 1000L, 0L), state)
+    val rest = AnnIndex.sync(path, "v")
+    assert(rest.fragments == 0 && rest.tombstones == 1, s"rest: $rest")
+    state -= 21L
+    checkServe(s, path, Array(0L, 3L, 1000L, 0L), state)
+    // a keyed index always equals a fresh build over the snapshot
+    import s.implicits._
+    Seq(Array(1000L, 2L, 0L, 1L), Array(0L, 3L, 1000L, 0L)).foreach { q =>
+      val qs = Seq((900L, q.toSeq, dot(q, q))).toDF("qid", "qv", "qn")
+      def top3(df: DataFrame) =
+        df.filter(col("rnk") <= 3).drop("is_new").collect().toSeq
+      assert(top3(AnnIndex.serve(s, path, "v", qs)) ==
+        top3(AnnIndex.serveSnapshot(s, path, "v", qs)),
+        "maintained keyed serve must equal the snapshot serve")
+    }
   }
 
   test("repeated folds: a level fully shadowed by newer ones is vacuumed") {
@@ -424,6 +495,69 @@ class AnnIndexSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](AnnIndex.serve(
       s, path, "v", qs, filter = Some(7L))).getMessage
       .contains("no sub-index"))
+  }
+
+  test("concurrent family sync: one window hitting two subs, one sub's " +
+      "cursor behind, equals syncing one version at a time") {
+    // two tables take the same commits: `a` syncs after the first, then
+    // src=1's tree rolls back to its pre-sync copy (a crash after src 0
+    // committed) and ONE window syncs the rest — subs run concurrently,
+    // src 1 from further behind; `b`, the twin, syncs every commit alone
+    def family(name: String): (SparkSession, String) = {
+      val (s, path) = freshCat(name)
+      s.sql(s"ALTER TABLE $name.default.t ADD COLUMNS (src INT)")
+      s.sql(s"INSERT INTO $name.default.t VALUES " + base.flatMap {
+        case (id, cell, v) => Seq(0L, 1L).map(src =>
+          s"(${id + 100 * src}, 0, 'x', 's', '', $cell, " +
+            s"array(${v.mkString(",")}L), $src)")
+      }.mkString(", "))
+      s.sql(s"CALL $name.system.ann_build(" +
+        "'default.t', 'doc_id', 'v', 'cell', 'src')")
+      (s, path)
+    }
+    def arrivals(ids: (Long, Long)*): String = ids.map { case (id, src) =>
+      s"($id, 0, 'x', 's', '', 9, array(${1000 - id % 7}, ${id % 5}, 0, 3), $src)"
+    }.mkString(", ")
+    // inserts and deletes in BOTH subs; the last delete hits rows that
+    // arrived through the window's own fragments
+    val commits: Seq[String => String] = Seq(
+      n => s"INSERT INTO $n.default.t VALUES " + arrivals(50L -> 0L, 150L -> 1L),
+      n => s"DELETE FROM $n.default.t WHERE doc_id IN (3, 113, 150)",
+      n => s"INSERT INTO $n.default.t VALUES " + arrivals(51L -> 0L, 151L -> 1L),
+      n => s"DELETE FROM $n.default.t WHERE doc_id IN (50, 151, 22)")
+    val (sa, pa) = family("annca")
+    val (sb, pb) = family("anncb")
+    val ra = AnnIndex.dirFor(pa, "v")
+    val rb = AnnIndex.dirFor(pb, "v")
+    sa.sql(commits.head("annca"))
+    val behind = Files.createTempDirectory("ann-behind").resolve("src=1")
+    graft.core.Fs.copyRecursively(ra.resolve("src=1"), behind)
+    AnnIndex.sync(pa, "v")
+    graft.core.Fs.deleteRecursively(ra.resolve("src=1"))
+    graft.core.Fs.copyRecursively(behind, ra.resolve("src=1"))
+    assert(AnnIndex.load(ra.resolve("src=1")).synced <
+      AnnIndex.load(ra.resolve("src=0")).synced, "src=1 must be behind")
+    commits.tail.foreach(c => sa.sql(c("annca")))
+    AnnIndex.sync(pa, "v")
+    commits.foreach { c => sb.sql(c("anncb")); AnnIndex.sync(pb, "v") }
+
+    Seq(0L, 1L).foreach { k =>
+      val (la, lb) = (AnnIndex.load(ra.resolve(s"src=$k")),
+        AnnIndex.load(rb.resolve(s"src=$k")))
+      assert(la.synced == lb.synced, s"src=$k cursor: $la vs $lb")
+      assert(la.frags.size == lb.frags.size && la.frags.size == 2 &&
+        la.tombs.size == lb.tombs.size && la.tombs.size == 2,
+        s"src=$k layers: $la vs $lb")
+      Seq(Array(1000L, 1L, 0L, 0L), Array(990L, 3L, 0L, 3L)).foreach { q =>
+        def served(s: SparkSession, path: String) = {
+          import s.implicits._
+          val qs = Seq((900L, q.toSeq, dot(q, q))).toDF("qid", "qv", "qn")
+          AnnIndex.serve(s, path, "v", qs, filter = Some(k)).collect().toSeq
+        }
+        assert(served(sa, pa) == served(sb, pb),
+          s"src=$k serve differs from the one-version-at-a-time twin")
+      }
+    }
   }
 
   test("windowed sync: ONE change-feed read covers the whole unsynced " +

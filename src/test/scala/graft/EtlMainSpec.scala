@@ -28,8 +28,8 @@ class EtlMainSpec extends SparkSpec {
     new String(Files.readAllBytes(csv), "UTF-8").linesIterator.toSeq
   }
 
-  private lazy val outDir: String = {
-    val dir = Files.createTempDirectory("etl_main")
+  /** Writes the fixture's base, price and occupancy files into `dir`. */
+  private def writeInputs(dir: Path): (String, String, String) = {
     val header = Seq(
       "Unidade", "Procedimento", "Nome_Medico", "Convenio",
       "Agendamento Inicio", "Data_Marcacao", "Pacientes_Sexo",
@@ -55,10 +55,42 @@ class EtlMainSpec extends SparkSpec {
         "Outro\tAmil\t50,00\n", "ISO-8859-1")
     val occPath = write(dir, "occ.csv",
       "Nome_Medico;qtde_horarios_disponiveis\nDR A;10\ndr a;5\nDr B;4\n", "UTF-8")
+    (basePath, pricePath, occPath)
+  }
+
+  private val asOf = to_timestamp(lit("2024-06-01 00:00:00"))
+
+  private lazy val outDir: String = {
+    val dir = Files.createTempDirectory("etl_main")
+    val (basePath, pricePath, occPath) = writeInputs(dir)
     val out = dir.resolve("out").toString
-    EtlMain.run(spark, basePath, pricePath, out, Some(occPath),
-      asOf = to_timestamp(lit("2024-06-01 00:00:00")))
+    EtlMain.run(spark, basePath, pricePath, out, Some(occPath), asOf)
     out
+  }
+
+  test("a run whose sink fails leaves no cached enriched base in the session") {
+    val dir = Files.createTempDirectory("etl_main_fail")
+    val (basePath, pricePath, _) = writeInputs(dir)
+    // outDir nested under a regular file: the first sink fails after
+    // the enriched base was persisted
+    val blocker = write(dir, "blocker", "x", "UTF-8")
+    intercept[Exception] {
+      EtlMain.run(spark, basePath, pricePath, s"$blocker/out", None, asOf)
+    }
+    // the run's enriched plan, rebuilt from the same inputs
+    val enriched = graft.etl.Pipeline.priceJoin(
+      graft.etl.Pipeline.enrich(graft.etl.Pipeline.parseDates(
+        graft.etl.Pipeline.canonicalize(graft.io.Readers
+          .csvWithEncodingRetry(spark, basePath, sep = ";"))), asOf),
+      graft.io.Readers.csvPriceTable(spark, pricePath))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val cache = spark.sharedState.cacheManager
+    assert(cache.lookupCachedData(enriched).isEmpty,
+      "the failed run left its enriched base cached")
+    // the lookup matches the run's plan: persisting it registers an entry
+    enriched.persist()
+    try assert(cache.lookupCachedData(enriched).nonEmpty)
+    finally { enriched.unpersist(); () }
   }
 
   test("all ten contract files exist with headers and data") {

@@ -38,6 +38,11 @@ class PlanAuditSpec extends SparkSpec {
   private def q(name: String): String =
     planOf(Registry.byName(name).fn(session, dir))
 
+  /** The engine fold's input frame over a lifecycle state's index. */
+  private def foldInputOf(tablePath: String): DataFrame =
+    graft.sources.AnnIndex.foldInput(session, graft.sources.AnnIndex.load(
+      graft.sources.AnnIndex.dirFor(tablePath, "q")))._2
+
   /** Count shuffle exchanges. Explain indents operators with `+-`/`:-`
     * prefixes, so a startsWith("Exchange") only ever matches a root-level
     * node (i.e. counts 0 for any real plan — the round-6 review found
@@ -376,15 +381,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q212 fold: input reads only affected base cells; serve prunes both layers") {
-    // the nightly fold's INPUT frame: the base scan must carry the
-    // affected-cell partition filter — untouched cells never read
-    val (idx, delta) = graft.queries.EmbedOps.annIncPaths(session, dir)
-    val foldPlan = planOf(
-      graft.queries.EmbedOps.annFoldInput(session, idx, delta))
+    // the engine fold's INPUT frame over q207's one-fragment state:
+    // the base scan must carry the affected-cell partition filter —
+    // untouched cells never read
+    val foldPlan = planOf(foldInputOf(
+      graft.queries.EmbedOps.annUpsertState(session, dir)))
     val baseScan = foldPlan.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("vectors") &&
-        !l.contains("delta")).getOrElse(
-      fail(s"no base vector scan in the fold input plan:\n$foldPlan"))
+      l.contains("FileScan parquet") && l.contains("/base/vectors"))
+      .getOrElse(fail(s"no base vector scan in the fold input plan:\n$foldPlan"))
     assert(baseScan.contains("PartitionFilters: [") &&
       baseScan.replaceAll(".*PartitionFilters: \\[", "")
         .takeWhile(_ != ']').contains("label"),
@@ -405,17 +409,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q217 LSM fold+retire: one-pass fold input reads only affected cells; post-retire serve prunes and broadcasts") {
-    // the MULTI-fragment fold input (over the pristine Scratch
-    // fragments): the base scan must carry the affected-cell
-    // partition filter — folding 3 fragments still never rescans
-    // untouched cells
-    val idx = graft.queries.EmbedOps.annIncPaths(session, dir)._1
-    val pristine = graft.queries.EmbedOps.annLsmFrags(session, dir)
-    val fragVecs = (0 to 2).map(k => s"$pristine/frag-$k/vectors")
-    val foldPlan = planOf(
-      graft.queries.EmbedOps.annLsmFoldInput(session, idx, fragVecs))
+    // the engine's MULTI-fragment fold input (over the pristine
+    // three-fragment state): the base scan must carry the
+    // affected-cell partition filter — folding 3 fragments still never
+    // rescans untouched cells
+    val foldPlan = planOf(foldInputOf(
+      graft.queries.EmbedOps.annLsmState(session, dir)))
     val baseScan = foldPlan.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("ivf_index_inc"))
+      l.contains("FileScan parquet") && l.contains("/base/vectors"))
       .getOrElse(fail(s"no base vector scan in the fold input:\n$foldPlan"))
     assert(baseScan.contains("PartitionFilters: [") &&
       baseScan.replaceAll(".*PartitionFilters: \\[", "")
@@ -437,20 +438,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q221 tombstone delete: masked pool prunes cells and broadcast-anti-joins the keys; post-compaction serve prunes") {
-    // the masked serve's pool shape over the pristine fixture: the
-    // base scan pruned to probed cells, the tombstone keys a
-    // BROADCAST anti-join (batch-sized by contract) — never a
-    // corpus-wide shuffle to apply a delete
-    val (idx, tomb) = graft.queries.EmbedOps.annTombPaths(session, dir)
-    val keys = session.read.parquet(s"$tomb/keys")
-    val somePool = session.read.parquet(s"$idx/vectors")
-      .filter(col("label").isin(0, 1))
-      .join(broadcast(keys), Seq("vec_id", "label"), "left_anti")
-    val mp = planOf(somePool)
+    // the engine's compaction input over the pristine tombstone state
+    // (the same pool resolution the masked serve uses): the base scan
+    // pruned to the affected cells, the tombstone keys a BROADCAST
+    // anti-join (batch-sized by contract) — never a corpus-wide
+    // shuffle to apply a delete
+    val mp = planOf(foldInputOf(
+      graft.queries.EmbedOps.annTombState(session, dir)))
     assert(mp.contains("BroadcastHashJoin") && mp.contains("LeftAnti"),
       s"tombstone mask must be a broadcast anti-join:\n$mp")
     assert(mp.linesIterator.exists(l => l.contains("FileScan parquet") &&
-      l.contains("ivf_index_inc") &&
+      l.contains("/base/vectors") &&
       l.replaceAll(".*PartitionFilters: \\[", "")
         .takeWhile(_ != ']').contains("label")),
       s"masked pool must prune probed cells:\n$mp")
@@ -607,18 +605,20 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q225 filtered LSM: every pool scan prunes on the filter key; probed cells via label") {
     val p = q("q225_filtered_ann_lsm")
-    // the src-partitioned layout must reach the scans: the untouched
-    // src-1 serve (and the src-0 cold-cell fallback) read base vectors
-    // with src AND label in PartitionFilters — maintenance in one src
-    // never widens another src's reads
-    val bothPruned = p.linesIterator.exists { l =>
-      l.contains("FileScan parquet") && {
-        val pf = l.replaceAll(".*PartitionFilters: \\[", "")
-          .takeWhile(_ != ']')
-        pf.contains("src") && pf.contains("label")
-      }
-    }
-    assert(bothPruned, s"no pool scan pruned on src AND label:\n$p")
+    // the filter key is the sub-index ROOT (`_ann/q/src=<k>/`, one
+    // self-contained tree per src): every pool scan reads inside ONE
+    // src's tree with the probed cells in PartitionFilters, so
+    // maintenance in one src never widens another src's reads — the
+    // untouched src-1 slice reads its base layer only
+    val pool = p.linesIterator.filter { l =>
+      l.contains("FileScan parquet") &&
+        l.replaceAll(".*PartitionFilters: \\[", "")
+          .takeWhile(_ != ']').contains("label")
+    }.toSeq
+    assert(pool.nonEmpty && pool.forall(_.contains("/_ann/q/src=")),
+      s"every pool scan must read inside one src sub-index tree:\n$p")
+    assert(pool.exists(_.contains("/src=1/base/vectors")),
+      s"no src-1 base scan pruned on label:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"probe/mask joins must broadcast:\n$p")
     assert(!p.contains("SinglePartition"),
